@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** Codegen'd 60-bit md5 hash (SURVEY.md §3: custom-Expression tier) —
   * the value contract of [[SharedHash.md5Long60]]: the first 15 hex
@@ -19,8 +19,11 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * md5-shared oracle (q21, q87, q111, q120, ...) re-proves it end to
   * end.
   */
-case class Md5Long60Expr(child: Expression) extends UnaryExpression {
+case class Md5Long60Expr(child: Expression) extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = LongType
+
+  // a non-binary child fails analysis instead of the generated code
+  override def inputTypes = Seq(BinaryType)
 
   override def nullSafeEval(input: Any): Any =
     Md5Long60Util.hash(input.asInstanceOf[Array[Byte]])

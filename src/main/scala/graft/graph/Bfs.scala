@@ -66,8 +66,11 @@ object Bfs {
       val obs = org.apache.spark.sql.Observation()
       val next = Bridge.iterCheckpointKeyed(
         nextPlan.observe(obs, count(lit(1)).as("n")))
-      if (obs.get("n").asInstanceOf[Long] == 0L) done = true
-      else {
+      if (obs.get("n").asInstanceOf[Long] == 0L) {
+        // the empty frontier leaf joins nothing: free its blocks
+        Bridge.releaseCheckpoints(next)
+        done = true
+      } else {
         settled = settled.unionByName(next)
         frontier = next
       }

@@ -63,6 +63,8 @@ object KCore {
       e0.repartition(col("u")).sortWithinPartitions("u"))
     val eByV = Bridge.staticCheckpointKeyed(
       e0.repartition(col("v")).sortWithinPartitions("v"))
+    // both copies are materialized: the canonical frame is never read again
+    Bridge.releaseCheckpoints(e0)
 
     def checkpointRdd(d: DataFrame) =
       d.queryExecution.analyzed.collectFirst {

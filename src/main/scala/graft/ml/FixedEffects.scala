@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
@@ -30,15 +30,24 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * `demeaned` frame (one join) exists for residual/variance consumers.
   * Per-sweep state is cell-sized, never n-sized.
   *
-  * Two regimes, same algebra:
+  * Two gates pick where the sweeps run; the first two paths share one
+  * solver (Halperin sweeps, vector-Aitken extrapolation, Jacobi-
+  * preconditioned CG, the cell Gram) and differ only in how its cell
+  * passes run ([[CellPasses]]):
   *  - cells fit on the driver (≤ `collectCellLimit`): collect the cell
-  *    stats once and run the sweeps in local arrays — a sweep is O(#cells
-  *    · #FEs · #cols) flops, so convergence to machine precision costs
-  *    microseconds and ZERO extra cluster jobs;
-  *  - cells too large: sweeps run on the persisted cell frame (groupBy
-  *    the FE key + broadcast-join the tiny means back), with the lazy
-  *    localCheckpoint-per-sweep lineage hygiene from round 1 — but on
-  *    the compressed frame, whose width is 1 + #cols doubles.
+  *    stats once and run every pass in local arrays — a pass is
+  *    O(#cells · #FEs · #cols) flops, so convergence to machine
+  *    precision costs microseconds and ZERO extra cluster jobs;
+  *  - more cells, every FE within the broadcast gate
+  *    (`spark.graft.fe.broadcastGroupLimit`): the same solver over a
+  *    cached RDD of primitive cell blocks, one Spark job per pass and
+  *    no Catalyst plan inside the loop — the same sweep count, and
+  *    effects equal up to summation order;
+  *  - some FE over the gate (its parameters cannot live on the
+  *    driver): the sweeps run on the persisted cell frame (groupBy the
+  *    FE key + join the means back, lazy localCheckpoint per probe) and
+  *    the CG as keyed frames — on the compressed frame, whose width is
+  *    1 + #cols doubles.
   */
 case class FeModel(
     yName: String,
@@ -316,7 +325,6 @@ object FixedEffects {
       accelerate: Boolean = true,
       knownCellCount: Option[Long] = None
   ): Demeaned = {
-    val k = cols.length
     val K = fes.length
     val dcols = cols.map(c => col(c).cast("double"))
     // frequency weights: every count becomes Σw and every sum w-scaled —
@@ -347,11 +355,7 @@ object FixedEffects {
     // scale; the full set makes the demeaned Gram computable from cells
     // alone, so a fit never needs a second fact pass). Map-side combine
     // means only #cells rows shuffle.
-    val statAggs = sum(w).as("__n") +:
-      ((0 until k).map(i => sum(w * dcols(i)).as(s"__s_$i")) ++
-        (for (i <- 0 until k; j <- i until k)
-          yield sum(w * dcols(i) * dcols(j)).as(s"__q_${i}_$j")))
-    val cells0 = df.groupBy(fes.map(col): _*).agg(statAggs.head, statAggs.tail: _*)
+    val cells0 = cellStats(df, cols, fes, w)
     // the distinct-FE-tuple count is a property of the FRAME, not of
     // this call — iterative fitters (FE-GLM: one fitWeighted per IRLS
     // step over the same rows) pass it in once and save the
@@ -366,7 +370,22 @@ object FixedEffects {
 
     if (nCells <= collectCellLimit)
       demeanDriverCells(df, cols, fes, cells, maxSweeps, tol, accelerate)
-    else demeanDistributedCells(df, cols, fes, cells, maxSweeps, tol, accelerate)
+    else demeanDistributedCells(df, cols, fes, cells, nCells, maxSweeps, tol, accelerate)
+  }
+
+  /** The cell frame: per distinct FE tuple, the weight mass `__n`, the
+    * weighted sums `__s_i` and cross-product sums `__q_i_j` (i ≤ j) of
+    * `cols`.
+    */
+  private[ml] def cellStats(df: DataFrame, cols: Seq[String], fes: Seq[String], w: Column)
+      : DataFrame = {
+    val k = cols.length
+    val dcols = cols.map(c => col(c).cast("double"))
+    val statAggs = sum(w).as("__n") +:
+      ((0 until k).map(i => sum(w * dcols(i)).as(s"__s_$i")) ++
+        (for (i <- 0 until k; j <- i until k)
+          yield sum(w * dcols(i) * dcols(j)).as(s"__q_${i}_$j")))
+    df.groupBy(fes.map(col): _*).agg(statAggs.head, statAggs.tail: _*)
   }
 
   /** Frisch–Waugh–Lovell partial-out: residualize each of `cols` on
@@ -413,11 +432,12 @@ object FixedEffects {
     }
   }
 
-  /** Sweeps over COLLECTED cell statistics in driver arrays: each sweep
-    * is O(#cells · #FEs · #cols) flops with zero cluster jobs, so the
-    * classic MAP convergence-rate weakness costs microseconds, not
-    * cluster sweeps. The facts then get the converged effects back via
-    * per-FE broadcast joins (the effect tables are #groups rows each).
+  /** Sweeps over COLLECTED cell statistics in driver arrays
+    * ([[LocalCells]]): each pass is O(#cells · #FEs · #cols) flops with
+    * zero cluster jobs, so the classic MAP convergence-rate weakness
+    * costs microseconds, not cluster sweeps. The facts then get the
+    * converged effects back via per-FE broadcast joins (the effect
+    * tables are #groups rows each).
     */
   private def demeanDriverCells(
       df: DataFrame,
@@ -428,58 +448,34 @@ object FixedEffects {
       tol: Double,
       accelerate: Boolean
   ): Demeaned = {
-    val k = cols.length
-    val K = fes.length
     val cellSchema = cells.schema
     val rows = cells.collect()
     cells.unpersist(false)
-    val nc = rows.length
+    val p = new LocalCells(rows, fes.length, cols.length)
+    val (eff, sweeps) = solveCells(p, cols.length, maxSweeps, tol, accelerate)
+    cellOutput(df, cols, fes, cellSchema, p, eff, sweeps)
+  }
 
-    // dense group indexing per FE
-    val idx = Array.fill(K)(new java.util.HashMap[Any, Integer]())
-    val cellG = Array.ofDim[Int](nc, K)
-    val cellN = new Array[Double](nc)
-    val cellS = Array.ofDim[Double](nc, k)
-    val cellQ = Array.ofDim[Double](nc, k * (k + 1) / 2)
-    var totN = 0.0
-    val totQ = new Array[Double](k)
-    var ci = 0
-    while (ci < nc) {
-      val r = rows(ci)
-      var f = 0
-      while (f < K) {
-        val key = r.get(f)
-        var g = idx(f).get(key)
-        if (g == null) { g = Integer.valueOf(idx(f).size()); idx(f).put(key, g) }
-        cellG(ci)(f) = g.intValue()
-        f += 1
-      }
-      cellN(ci) = r.getDouble(K)
-      totN += cellN(ci)
-      var c = 0
-      while (c < k) {
-        cellS(ci)(c) = r.getDouble(K + 1 + c)
-        c += 1
-      }
-      var p = 0
-      var qi = 0
-      while (qi < k) {
-        var qj = qi
-        while (qj < k) {
-          cellQ(ci)(p) = r.getDouble(K + 1 + k + p)
-          if (qi == qj) totQ(qi) += cellQ(ci)(p)
-          p += 1; qj += 1
-        }
-        qi += 1
-      }
-      ci += 1
-    }
-    val scale = math.max((0 until k).map(c => math.sqrt(totQ(c) / totN)).max, 1e-300)
-    val gN = Array.tabulate(K)(f => new Array[Double](idx(f).size()))
-    for (i <- 0 until nc; f <- 0 until K) gN(f)(cellG(i)(f)) += cellN(i)
-
+  /** The hybrid cell solver, shared by both cell backends (only their
+    * passes differ, see [[CellPasses]]): Halperin sweeps with
+    * vector-Aitken extrapolation, then Jacobi-preconditioned CG when
+    * the sweeps have not converged. Returns the cumulative per-FE,
+    * per-group, per-column effects and the sweep count (Halperin
+    * sweeps + CG iterations).
+    */
+  private[ml] def solveCells(
+      p: CellPasses,
+      k: Int,
+      maxSweeps: Int,
+      tol: Double,
+      accelerate: Boolean
+  ): (Array[Array[Array[Double]]], Int) = {
+    val G = p.groups
+    val K = G.length
+    val gN = p.groupMass
+    val scale = p.scale
     // cumulative per-FE, per-group, per-column effects
-    val eff = Array.tabulate(K)(f => Array.ofDim[Double](idx(f).size(), k))
+    val eff = Array.tabulate(K)(f => Array.ofDim[Double](G(f), k))
     var sweeps = 0
     var converged = false
     // hybrid solver: a few Halperin sweeps catch the easy spectra
@@ -506,31 +502,18 @@ object FixedEffects {
     val stepHist = scala.collection.mutable.ArrayBuffer.empty[Array[Array[Array[Double]]]]
     def stepDot(x: Array[Array[Array[Double]]], y: Array[Array[Array[Double]]]): Double = {
       var acc = 0.0
-      for (f2 <- 0 until K; g <- 0 until idx(f2).size(); c <- 0 until k)
+      for (f2 <- 0 until K; g <- 0 until G(f2); c <- 0 until k)
         acc += x(f2)(g)(c) * y(f2)(g)(c)
       acc
     }
     while (!converged && sweeps < halperinCap) {
       sweeps += 1
       val curStep =
-        if (accelerate) Array.tabulate(K)(f => Array.ofDim[Double](idx(f).size(), k)) else null
+        if (accelerate) Array.tabulate(K)(f => Array.ofDim[Double](G(f), k)) else null
       var delta = 0.0
       var f = 0
       while (f < K) {
-        val num = Array.ofDim[Double](idx(f).size(), k)
-        var i = 0
-        while (i < nc) {
-          val g = cellG(i)(f)
-          var c = 0
-          while (c < k) {
-            var e = 0.0
-            var f2 = 0
-            while (f2 < K) { e += eff(f2)(cellG(i)(f2))(c); f2 += 1 }
-            num(g)(c) += cellS(i)(c) - cellN(i) * e
-            c += 1
-          }
-          i += 1
-        }
+        val num = p.stepSums(f, eff)
         var g = 0
         while (g < num.length) {
           var c = 0
@@ -547,7 +530,7 @@ object FixedEffects {
       }
       converged = delta < tol * scale
       if (sys.env.contains("GRAFT_FE_DEBUG"))
-        println(f"[fe-debug] driver sweep $sweeps: delta=${delta / scale}%.3e")
+        println(f"[fe-debug] cell sweep $sweeps: delta=${delta / scale}%.3e")
       if (accelerate && !converged) {
         stepHist += curStep
         // sweeps >= 3: by then the fast intra-cluster transient has
@@ -564,7 +547,7 @@ object FixedEffects {
             d1d2 = d2opt.map(stepDot(d1, _)).getOrElse(0.0),
             d2d2 = d2opt.map(d2 => stepDot(d2, d2)).getOrElse(0.0))
           aitkenCoef(dots).foreach { case (c0, c1) =>
-            for (f2 <- 0 until K; g <- 0 until idx(f2).size(); c <- 0 until k)
+            for (f2 <- 0 until K; g <- 0 until G(f2); c <- 0 until k)
               eff(f2)(g)(c) += c0 * d0(f2)(g)(c) + c1 * d1(f2)(g)(c)
             // step vectors are not comparable across the jump: re-seed
             stepHist.clear()
@@ -580,98 +563,92 @@ object FixedEffects {
       // the stopping rule matches the Halperin criterion exactly. H is
       // PSD with a known constant-shift nullspace; CG on the consistent
       // system converges to A⁺-consistent effects (cell totals unique).
-      // Warm-started from the Halperin state; each iteration is one
-      // O(#cells·K) matvec — a sweep's flops.
-      val off = new Array[Int](K + 1)
-      for (f <- 0 until K) off(f + 1) = off(f) + idx(f).size()
+      // Warm-started from the Halperin state. The columns run batched:
+      // one loop, one matvec pass per iteration over every column still
+      // active, and each column keeps its own alpha/beta and freezes
+      // once its residual passes the stopping rule.
+      val off = p.offsets
       val nP = off(K)
       val diag = new Array[Double](nP)
-      for (f <- 0 until K; g <- 0 until idx(f).size()) diag(off(f) + g) = gN(f)(g)
-      val bVec = Array.ofDim[Double](k, nP)
-      var bi = 0
-      while (bi < nc) {
-        var f = 0
-        while (f < K) {
-          val j = off(f) + cellG(bi)(f)
-          var c = 0
-          while (c < k) { bVec(c)(j) += cellS(bi)(c); c += 1 }
-          f += 1
-        }
-        bi += 1
+      for (f <- 0 until K; g <- 0 until G(f)) diag(off(f) + g) = gN(f)(g)
+      val bVec = p.rhs()
+      val x = Array.tabulate(k) { c =>
+        val a = new Array[Double](nP)
+        for (f <- 0 until K; g <- 0 until G(f)) a(off(f) + g) = eff(f)(g)(c)
+        a
       }
-      def matvec(v: Array[Double], out: Array[Double]): Unit = {
-        java.util.Arrays.fill(out, 0.0)
-        var i = 0
-        while (i < nc) {
-          var t = 0.0
-          var f = 0
-          while (f < K) { t += v(off(f) + cellG(i)(f)); f += 1 }
-          t *= cellN(i)
-          f = 0
-          while (f < K) { out(off(f) + cellG(i)(f)) += t; f += 1 }
-          i += 1
-        }
+      val hx = p.matvec(x, Array.fill(k)(true))
+      val r = Array.tabulate(k)(c => Array.tabulate(nP)(j => bVec(c)(j) - hx(c)(j)))
+      val z = Array.tabulate(k)(c => Array.tabulate(nP)(j => r(c)(j) / diag(j)))
+      val pv = z.map(_.clone())
+      val rz = Array.tabulate(k) { c =>
+        var acc = 0.0; var j = 0; while (j < nP) { acc += r(c)(j) * z(c)(j); j += 1 }; acc
       }
-      var cgIters = 0
-      var allDone = true
-      var c = 0
-      while (c < k) {
-        val x = new Array[Double](nP)
-        for (f <- 0 until K; g <- 0 until idx(f).size()) x(off(f) + g) = eff(f)(g)(c)
-        val r = new Array[Double](nP)
-        val hv = new Array[Double](nP)
-        matvec(x, hv)
-        var j = 0
-        while (j < nP) { r(j) = bVec(c)(j) - hv(j); j += 1 }
-        val z = Array.tabulate(nP)(j2 => r(j2) / diag(j2))
-        val p = z.clone()
-        var rz = { var acc = 0.0; var j2 = 0; while (j2 < nP) { acc += r(j2) * z(j2); j2 += 1 }; acc }
-        var it = 0
-        def maxStep(): Double = {
-          var mx = 0.0; var j2 = 0
-          while (j2 < nP) { val e = math.abs(r(j2) / diag(j2)); if (e > mx) mx = e; j2 += 1 }
-          mx
-        }
-        var done = maxStep() < tol * scale
-        while (!done && it < maxSweeps) {
-          it += 1
-          matvec(p, hv)
-          var php = 0.0
-          j = 0
-          while (j < nP) { php += p(j) * hv(j); j += 1 }
-          if (php <= 0.0) done = true
-          else {
-            val alpha = rz / php
-            j = 0
-            while (j < nP) { x(j) += alpha * p(j); r(j) -= alpha * hv(j); j += 1 }
-            done = maxStep() < tol * scale
-            var rz2 = 0.0
-            j = 0
-            while (j < nP) { z(j) = r(j) / diag(j); rz2 += r(j) * z(j); j += 1 }
-            val beta = rz2 / rz
-            rz = rz2
-            j = 0
-            while (j < nP) { p(j) = z(j) + beta * p(j); j += 1 }
+      def maxStep(c: Int): Double = {
+        var mx = 0.0; var j = 0
+        while (j < nP) { val e = math.abs(r(c)(j) / diag(j)); if (e > mx) mx = e; j += 1 }
+        mx
+      }
+      val done = Array.tabulate(k)(c => maxStep(c) < tol * scale)
+      var it = 0
+      while (done.contains(false) && it < maxSweeps) {
+        it += 1
+        val hv = p.matvec(pv, done.map(!_))
+        var c = 0
+        while (c < k) {
+          if (!done(c)) {
+            val (pc, hc, xc, rc, zc) = (pv(c), hv(c), x(c), r(c), z(c))
+            var php = 0.0
+            var j = 0
+            while (j < nP) { php += pc(j) * hc(j); j += 1 }
+            if (php <= 0.0) done(c) = true
+            else {
+              val alpha = rz(c) / php
+              j = 0
+              while (j < nP) { xc(j) += alpha * pc(j); rc(j) -= alpha * hc(j); j += 1 }
+              done(c) = maxStep(c) < tol * scale
+              var rz2 = 0.0
+              j = 0
+              while (j < nP) { zc(j) = rc(j) / diag(j); rz2 += rc(j) * zc(j); j += 1 }
+              val beta = rz2 / rz(c)
+              rz(c) = rz2
+              j = 0
+              while (j < nP) { pc(j) = zc(j) + beta * pc(j); j += 1 }
+            }
           }
+          c += 1
         }
-        if (!done) allDone = false
-        if (it > cgIters) cgIters = it
-        for (f <- 0 until K; g <- 0 until idx(f).size()) eff(f)(g)(c) = x(off(f) + g)
-        c += 1
       }
-      sweeps += cgIters
-      converged = allDone
+      for (c <- 0 until k; f <- 0 until K; g <- 0 until G(f)) eff(f)(g)(c) = x(c)(off(f) + g)
+      sweeps += it
     }
+    (eff, sweeps)
+  }
 
-    // apply: per-FE effect tables, broadcast-joined (each is #groups rows)
+  /** The cell regimes' shared result: per-FE effect tables built on the
+    * driver (each is #groups rows), the demeaned facts as lazy
+    * broadcast joins of those tables, and the demeaned Gram from one
+    * more cell pass — so a fit needs no second fact pass.
+    */
+  private def cellOutput(
+      df: DataFrame,
+      cols: Seq[String],
+      fes: Seq[String],
+      cellSchema: StructType,
+      p: CellPasses,
+      eff: Array[Array[Array[Double]]],
+      sweeps: Int
+  ): Demeaned = {
+    val k = cols.length
+    val K = fes.length
     val spark = df.sparkSession
     var out = cols.foldLeft(df) { (acc, c) => acc.withColumn(s"${c}__dm", col(c).cast("double")) }
     val effTables = (0 until K).map { f =>
       val schema = StructType(
         StructField(fes(f), cellSchema(f).dataType) +:
           cols.map(c => StructField(s"eff_$c", DoubleType)))
-      val data = new java.util.ArrayList[Row](idx(f).size())
-      val it = idx(f).entrySet().iterator()
+      val data = new java.util.ArrayList[Row](p.index(f).size())
+      val it = p.index(f).entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
         val g = e.getValue.intValue()
@@ -690,42 +667,73 @@ object FixedEffects {
         s"${c}__dm",
         (0 until K).foldLeft(col(s"${c}__dm"))((e, f) => e - col(s"__eff_${f}_$i")))
     }.drop((for (f <- 0 until K; i <- 0 until k) yield s"__eff_${f}_$i"): _*)
-
-    // demeaned Gram from the same cell stats — zero extra cluster jobs
-    val gram = Array.ofDim[Double](k, k)
-    val ac = new Array[Double](k)
-    var gi = 0
-    while (gi < nc) {
-      var c = 0
-      while (c < k) {
-        var e = 0.0
-        var f = 0
-        while (f < K) { e += eff(f)(cellG(gi)(f))(c); f += 1 }
-        ac(c) = e
-        c += 1
-      }
-      var p = 0
-      var i = 0
-      while (i < k) {
-        var j = i
-        while (j < k) {
-          gram(i)(j) += cellQ(gi)(p) - cellS(gi)(i) * ac(j) - cellS(gi)(j) * ac(i) +
-            cellN(gi) * ac(i) * ac(j)
-          p += 1; j += 1
-        }
-        i += 1
-      }
-      gi += 1
-    }
-    for (i <- 0 until k; j <- i + 1 until k) gram(j)(i) = gram(i)(j)
-    Demeaned(out, sweeps, Some(effTables), Some(CellGram(cols, gram, totN)))
+    Demeaned(out, sweeps, Some(effTables), Some(CellGram(cols, p.gram(eff), p.totN)))
   }
 
-  /** Sweeps over the PERSISTED cell frame when the cells don't fit on the
-    * driver (e.g. worker×firm panels at full scale). Same algebra, but
-    * the running residual sums live in the cell frame: per FE step one
+  /** Cells too many to collect (> `collectCellLimit`). The broadcast
+    * gate (`spark.graft.fe.broadcastGroupLimit`) picks the path:
+    *  - every FE within the gate: the parameter space Σ_f G_f fits on
+    *    the driver, so the driver-cell regime's own solver runs over a
+    *    cached RDD of primitive cell blocks ([[RddCells]]) — one Spark
+    *    job per cell pass, no Catalyst plan inside the loop, and the
+    *    same sweep count, effects and Gram as the driver-cell regime up
+    *    to summation order;
+    *  - some FE over the gate: its parameters cannot live on the
+    *    driver, so the sweeps and CG run as frames
+    *    ([[demeanFrameCells]]).
+    * An FE has at most #cells groups, so only a cell count over the gate
+    * needs the per-FE group counts: one aggregate, which also gives the
+    * frame path its convergence scale.
+    */
+  private def demeanDistributedCells(
+      df: DataFrame,
+      cols: Seq[String],
+      fes: Seq[String],
+      cells: DataFrame,
+      nCells: Long,
+      maxSweeps: Int,
+      tol: Double,
+      accelerate: Boolean
+  ): Demeaned = {
+    val k = cols.length
+    def onCellRdd(): Demeaned = {
+      val p = timed("cell blocks")(new RddCells(cells.rdd, fes.length, k))
+      // the blocks are materialized: the cell frame is no longer read
+      cells.unpersist(false)
+      try {
+        val (eff, sweeps) = solveCells(p, k, maxSweeps, tol, accelerate)
+        cellOutput(df, cols, fes, cells.schema, p, eff, sweeps)
+      } finally p.release()
+    }
+    // conf-injectable so the frame regime (some dimension past the
+    // broadcast bound) is testable without planting 2M+ groups
+    val broadcastGroupLimit = df.sparkSession.conf
+      .get("spark.graft.fe.broadcastGroupLimit", "2000000").toLong
+    if (nCells <= broadcastGroupLimit) return onCellRdd()
+    val statRow = timed("scale agg")(cells
+      .agg(
+        sum(col("__n")).as("n"),
+        ((0 until k).map(i => sum(col(s"__q_${i}_$i")).as(s"q_$i")) ++
+          fes.map(f => count_distinct(col(f)).as(s"g_$f"))): _*)
+      .head())
+    val feGroupCount: Map[String, Long] =
+      fes.zipWithIndex.map { case (f, i) => f -> statRow.getLong(1 + k + i) }.toMap
+    val feBroadcast: Map[String, Boolean] =
+      fes.map(f => f -> (feGroupCount(f) <= broadcastGroupLimit)).toMap
+    if (fes.forall(feBroadcast)) onCellRdd()
+    else {
+      val scale = CellPasses.scaleOf(statRow.getDouble(0), (0 until k).map(i => statRow.getDouble(1 + i)))
+      demeanFrameCells(df, cols, fes, cells, maxSweeps, tol, accelerate, scale, feBroadcast,
+        feGroupCount)
+    }
+  }
+
+  /** Sweeps over the PERSISTED cell frame when some FE has more groups
+    * than the broadcast gate allows (a billion-level worker dimension),
+    * so no parameter vector fits on the driver. Same algebra, but the
+    * running residual sums live in the cell frame: per FE step one
     * groupBy(fe) aggregate (≤ #groups rows move) + one join back of the
-    * tiny means. Lazy localCheckpoint per sweep truncates the plan; the
+    * means. Lazy localCheckpoint per sweep truncates the plan; the
     * checkpointed state is #cells × (1 + #cols) doubles — never n-sized.
     *
     * Job-count discipline (the q59 lesson): the sweeps themselves are
@@ -734,50 +742,26 @@ object FixedEffects {
     * still exit in 1–2 sweeps). The probe reads only the CURRENT sweep's
     * means (per-FE step means shrink monotonically under alternating
     * projections, so a converged probe at sweep s certifies s; batching
-    * costs at most one extra sweep, which is why reported sweep counts
-    * can exceed the driver-cell regime's by one). Per-FE effect tables
-    * are NOT maintained in the loop — every step's means frame is
-    * already persisted for the join-back, so the cumulative effects are
-    * one union + groupBy-sum per FE AFTER convergence, replacing a
-    * join + localCheckpoint per FE per sweep.
+    * costs at most one extra sweep over the driver-cell count). Per-FE
+    * effect tables are NOT maintained in the loop — every step's means
+    * frame is already persisted for the join-back, so the cumulative
+    * effects are one union + groupBy-sum per FE AFTER convergence,
+    * replacing a join + localCheckpoint per FE per sweep. Past the
+    * Halperin budget the solve bails to the keyed-frame PCG.
     */
-  private def demeanDistributedCells(
+  private def demeanFrameCells(
       df: DataFrame,
       cols: Seq[String],
       fes: Seq[String],
       cells: DataFrame,
       maxSweeps: Int,
       tol: Double,
-      accelerate: Boolean
+      accelerate: Boolean,
+      scale: Double,
+      feBroadcast: Map[String, Boolean],
+      feGroupCount: Map[String, Long]
   ): Demeaned = {
     val k = cols.length
-
-    // convergence scale from the same cell stats — no extra fact pass
-    // one aggregate: convergence scale AND per-FE group counts (the
-    // broadcast-join gate below)
-    val scaleRow = timed("scale agg")(cells
-      .agg(
-        sum(col("__n")).as("n"),
-        ((0 until k).map(i => sum(col(s"__q_${i}_$i")).as(s"q_$i")) ++
-          fes.map(f => count_distinct(col(f)).as(s"g_$f"))): _*)
-      .head())
-    val totN = scaleRow.getDouble(0)
-    val scale =
-      math.max((0 until k).map(i => math.sqrt(scaleRow.getDouble(1 + i) / totN)).max, 1e-300)
-    // means frames with few enough groups are BROADCAST back onto the
-    // cell frame: the cell frame then never re-shuffles inside the loop
-    // (each FE step is one map-side-combined groupBy of narrow rows +
-    // a broadcast hash join). FEs with huge group counts (a 1e8-group
-    // user dimension) fall back to the planner's shuffle join.
-    // conf-injectable so the frame-CG regime (some dimension past the
-    // broadcast bound) is testable without planting 2M+ groups
-    val broadcastGroupLimit = df.sparkSession.conf
-      .get("spark.graft.fe.broadcastGroupLimit", "2000000").toLong
-    val feGroupCount: Map[String, Long] =
-      fes.zipWithIndex.map { case (f, i) => f -> scaleRow.getLong(1 + k + i) }.toMap
-    val feBroadcast: Map[String, Boolean] =
-      fes.map(f => f -> (feGroupCount(f) <= broadcastGroupLimit)).toMap
-
     def checkpointRdd(d: DataFrame) =
       d.queryExecution.analyzed.collectFirst {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
@@ -788,9 +772,8 @@ object FixedEffects {
     var sweeps = 0
     var converged = false
     // set at a non-converged probe once the Halperin budget is spent —
-    // switches to the distributed-matvec PCG below (the same hybrid as
-    // the driver regime; requires every FE under the broadcast gate,
-    // since CG keeps the parameter vectors driver-side)
+    // switches to the keyed-frame PCG below (the cell solver's hybrid,
+    // with the CG state in frames)
     var bailToCg = false
     // sweep number of the last applied Aitken correction — the ratio
     // estimate needs two PLAIN sweeps since the jump
@@ -855,7 +838,7 @@ object FixedEffects {
         val slowProbe = delta >= 0.1 * lastProbeDelta
         lastProbeDelta = delta
         if (accelerate && !converged && slowProbe && sweeps >= 4 && sweeps - 1 > lastExtrap) {
-          // vector-Aitken, the distributed twin of the driver regime's:
+          // vector-Aitken, the frame twin of the cell solver's:
           // the same order-2 step-recurrence fit, with the dot products
           // taken over the last plain sweeps' step-means frames (all
           // already persisted and materialized by this probe's
@@ -933,161 +916,10 @@ object FixedEffects {
       if (accelerate && !converged && sweeps >= 10) bailToCg = true
     }
 
-    if (bailToCg && fes.forall(feBroadcast)) {
-      // ---- distributed-matvec PCG (the driver regime's hybrid, for
-      // cell frames too big to collect): the PARAMETER space Σ_f G_f is
-      // broadcast-sized by the bail gate even when #cells is not, so
-      // the CG vectors live on the driver and only the matvec
-      // H v = AᵀN A v touches the cluster — one pass over the persisted
-      // cell frame per iteration (broadcast-join the parameter frames,
-      // t_c = n_c·Σ_f v_f, then one groupBy per FE). Stopping rule is
-      // the preconditioned residual max |r_g / n_g| — exactly the
-      // per-group step mean the Halperin probe gates on.
-      val spark = df.sparkSession
-      val K = fes.length
-      val gKeys = new Array[Array[Any]](K)
-      val gIdx = Array.fill(K)(new java.util.HashMap[Any, Integer]())
-      val gMass = new Array[Array[Double]](K)
-      val bVec = new Array[Array[Array[Double]]](K)
-      for (f <- 0 until K) {
-        val aggs = sum(col("__n")).as("__gn") +:
-          (0 until k).map(i => sum(col(s"__s_$i")).as(s"__b_$i"))
-        val rows = cells.groupBy(col(fes(f))).agg(aggs.head, aggs.tail: _*).collect()
-        gKeys(f) = rows.map(_.get(0))
-        gMass(f) = rows.map(_.getDouble(1))
-        bVec(f) = rows.map(r => Array.tabulate(k)(i => r.getDouble(2 + i)))
-        rows.indices.foreach(g => gIdx(f).put(rows(g).get(0), g))
-      }
-      // warm start from the Halperin state: union-sum of applied means
-      val x0 = Array.tabulate(K)(f => Array.ofDim[Double](gKeys(f).length, k))
-      for (f <- 0 until K) {
-        val feName = fes(f)
-        val frames = meansHistory.collect { case (`feName`, _, _, m) => m }
-        if (frames.nonEmpty) {
-          frames.reduce(_ union _)
-            .groupBy(col(feName))
-            .agg(
-              sum(col("__mean_0")).as("__a_0"),
-              (1 until k).map(i => sum(col(s"__mean_$i")).as(s"__a_$i")): _*)
-            .collect()
-            .foreach { r =>
-              val g = gIdx(f).get(r.get(0)).intValue()
-              (0 until k).foreach(i => x0(f)(g)(i) = r.getDouble(1 + i))
-            }
-        }
-      }
-      val feFields = fes.indices.map(f => cells.schema(f))
-      def paramFrame(v: Array[Array[Array[Double]]], prefix: String): Seq[DataFrame] =
-        (0 until K).map { f =>
-          val data = new java.util.ArrayList[Row](gKeys(f).length)
-          for (g <- gKeys(f).indices)
-            data.add(Row.fromSeq(gKeys(f)(g) +: (0 until k).map(i => v(f)(g)(i))))
-          val schema = StructType(
-            feFields(f) +: (0 until k).map(i => StructField(s"${prefix}_${f}_$i", DoubleType)))
-          spark.createDataFrame(data, schema)
-        }
-      def matvec(v: Array[Array[Array[Double]]]): Array[Array[Array[Double]]] = {
-        val joined = paramFrame(v, "__v").zipWithIndex.foldLeft(cells: DataFrame) {
-          case (acc, (pf, f)) => acc.join(broadcast(pf), Seq(fes(f)))
-        }
-        // lazy keyed checkpoint, not persist: the K per-FE aggregates
-        // share one compute of the join, the bigFe groupBy reuses the
-        // preserved partitioning, and no columnar cache encoding is paid
-        val withT = org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(
-          joined.select(
-            fes.map(col) ++ (0 until k).map(i =>
-              (col("__n") * (0 until K).map(f => col(s"__v_${f}_$i")).reduce(_ + _))
-                .as(s"__t_$i")): _*),
-          eager = false)
-        val out = Array.tabulate(K)(f => Array.ofDim[Double](gKeys(f).length, k))
-        for (f <- 0 until K) {
-          val aggs = (0 until k).map(i => sum(col(s"__t_$i")).as(s"__h_$i"))
-          withT.groupBy(col(fes(f))).agg(aggs.head, aggs.tail: _*).collect().foreach { r =>
-            val g = gIdx(f).get(r.get(0)).intValue()
-            (0 until k).foreach(i => out(f)(g)(i) = r.getDouble(1 + i))
-          }
-        }
-        checkpointRdd(withT).foreach(_.unpersist(false))
-        out
-      }
-      def cube() = Array.tabulate(K)(f => Array.ofDim[Double](gKeys(f).length, k))
-      val x = x0.map(_.map(_.clone()))
-      val hx = matvec(x)
-      val r = cube(); val z = cube(); val p = cube()
-      for (f <- 0 until K; g <- gKeys(f).indices; c <- 0 until k) {
-        r(f)(g)(c) = bVec(f)(g)(c) - hx(f)(g)(c)
-        z(f)(g)(c) = r(f)(g)(c) / gMass(f)(g)
-        p(f)(g)(c) = z(f)(g)(c)
-      }
-      val rzC = Array.tabulate(k)(c =>
-        (0 until K).map(f => gKeys(f).indices.map(g => r(f)(g)(c) * z(f)(g)(c)).sum).sum)
-      def colDone(c: Int): Boolean = {
-        var mx = 0.0
-        for (f <- 0 until K; g <- gKeys(f).indices) {
-          val e = math.abs(r(f)(g)(c) / gMass(f)(g)); if (e > mx) mx = e
-        }
-        mx < tol * scale
-      }
-      val doneC = Array.tabulate(k)(colDone)
-      var iters = 0
-      while (!doneC.forall(identity) && sweeps + iters < maxSweeps) {
-        iters += 1
-        val hp = timed(s"cg matvec iter $iters")(matvec(p))
-        var c = 0
-        while (c < k) {
-          if (!doneC(c)) {
-            var php = 0.0
-            for (f <- 0 until K; g <- gKeys(f).indices) php += p(f)(g)(c) * hp(f)(g)(c)
-            if (php <= 0.0) doneC(c) = true
-            else {
-              val alpha = rzC(c) / php
-              for (f <- 0 until K; g <- gKeys(f).indices) {
-                x(f)(g)(c) += alpha * p(f)(g)(c)
-                r(f)(g)(c) -= alpha * hp(f)(g)(c)
-              }
-              doneC(c) = colDone(c)
-              var rz2 = 0.0
-              for (f <- 0 until K; g <- gKeys(f).indices) {
-                z(f)(g)(c) = r(f)(g)(c) / gMass(f)(g)
-                rz2 += r(f)(g)(c) * z(f)(g)(c)
-              }
-              val beta = rz2 / rzC(c)
-              rzC(c) = rz2
-              for (f <- 0 until K; g <- gKeys(f).indices)
-                p(f)(g)(c) = z(f)(g)(c) + beta * p(f)(g)(c)
-            }
-          }
-          c += 1
-        }
-      }
-      sweeps += iters
-      converged = doneC.forall(identity)
-      // the CG correction enters the applied-corrections history so the
-      // effect tables (union+sum) stay exact
-      val corr = Array.tabulate(K)(f =>
-        Array.tabulate(gKeys(f).length)(g => Array.tabulate(k)(c => x(f)(g)(c) - x0(f)(g)(c))))
-      paramFrame(corr, "__mean").zipWithIndex.foreach { case (pf, f) =>
-        val renamed = (0 until k).foldLeft(pf) { (d, i) =>
-          d.withColumnRenamed(s"__mean_${f}_$i", s"__mean_$i")
-        }.persist()
-        meansHistory += ((fes(f), sweeps, false, renamed))
-      }
-      // rebuild the residual state from x for the shared tail below
-      val joinedX = paramFrame(x, "__v").zipWithIndex.foldLeft(cells: DataFrame) {
-        case (acc, (pf, f)) => acc.join(broadcast(pf), Seq(fes(f)))
-      }
-      cur = joinedX
-        .select(
-          cells.columns.map(col) ++ (0 until k).map(i =>
-            (col(s"__s_$i") -
-              col("__n") * (0 until K).map(f => col(s"__v_${f}_$i")).reduce(_ + _))
-              .as(s"__r_$i")): _*)
-        .transform(org.apache.spark.sql.graftbridge.Bridge.truncate(_))
-      history += cur
-    } else if (bailToCg) {
-      // ---- keyed-frame PCG (the broadcast gate REMOVED): when some FE
-      // dimension's group count exceeds the broadcast bound (a billion-
-      // level worker or firm dimension at 100 TB), the CG parameter
+    if (bailToCg) {
+      // ---- keyed-frame PCG: some FE dimension's group count exceeds
+      // the broadcast bound (a billion-level worker or firm dimension at
+      // 100 TB), so the CG parameter
       // vectors cannot live on the driver — so the whole CG state lives
       // as K keyed frames, one per FE: (key, mass, b, x0, x, r, z, p per
       // demeaned column), and every CG scalar (rᵀz, pᵀHp, the
@@ -1099,7 +931,7 @@ object FixedEffects {
       // happens once, outside the loop; the per-iteration joins and the
       // groupBy on that key then reuse the partitioning) — then one
       // groupBy per FE. Preconditioner (z = r / groupMass) and stopping
-      // rule (max |r_g / n_g| < tol·scale) are the driver-vector path's
+      // rule (max |r_g / n_g| < tol·scale) are the cell solver's
       // exactly; regime parity is spec-pinned at 1e-8.
       import org.apache.spark.sql.graftbridge.Bridge
       val K = fes.length

@@ -134,30 +134,19 @@ object Bridge {
           if (ordRemapped.nonEmpty && ordRemapped.forall(_.references.subsetOf(outSet)))
             ordRemapped
           else Nil
-        // static frames: exact materialized bytes from the block store.
-        // The AppStatusStore is fed by an ASYNC listener bus, so the
-        // sizes can lag the eager action by a beat (r12 advice: a miss
-        // silently degraded the leaf to stats-free = never-broadcast,
-        // nondeterministically); poll briefly for the blocks to appear
-        // before giving up. Reliable-checkpoint mode stores no blocks
-        // in the block store — it stays stats-free by construction.
-        def blockBytes(): Option[Long] = ds.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == lr.rdd.id)
-          .map(i => i.memSize + i.diskSize)
-          .filter(_ > 0L)
+        // static frames: exact materialized bytes of the checkpointed
+        // blocks, read from the block manager master. Every block was
+        // reported to it synchronously before the eager action returned,
+        // so there is nothing to wait for, and an empty frame (no blocks,
+        // or empty ones) reads 0 bytes. Reliable-checkpoint mode stores
+        // no blocks in the block store — it stays stats-free by
+        // construction.
         val stats =
-          if (!keepStats) None
-          else {
-            var bytes = blockBytes()
-            var waited = 0
-            while (bytes.isEmpty && waited < 20
-                && lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE) {
-              Thread.sleep(50); waited += 1
-              bytes = blockBytes()
-            }
-            bytes.map(s => org.apache.spark.sql.catalyst.plans.logical.Statistics(
-              sizeInBytes = BigInt(s)))
-          }
+          if (!keepStats || lr.rdd.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
+            None
+          else
+            Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(
+              sizeInBytes = BigInt(blockBytes(lr.rdd.id))))
         org.apache.spark.sql.classic.Dataset.ofRows(
           ds.sparkSession,
           new LogicalRDD(lr.output, lr.rdd, part, ord, lr.isStreaming, lr.stream)(
@@ -165,6 +154,17 @@ object Bridge {
       case _ => ck
     }
   }
+
+  /** Memory + disk bytes of RDD `rddId`'s blocks, as the block manager
+    * master knows them (no listener-bus lag).
+    */
+  private def blockBytes(rddId: Int): Long =
+    org.apache.spark.SparkEnv.get.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks)
+      .collect { case (org.apache.spark.storage.RDDBlockId(`rddId`, _), st) =>
+        st.memSize + st.diskSize
+      }
+      .sum
 
   /** Release every checkpoint block reachable from `df`'s plan: the
     * library-caller release handle (r12 advice) for frames built over

@@ -1,6 +1,11 @@
 package graft.ml
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftspec.DriverBlocks
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 
@@ -765,6 +770,19 @@ class RegressionSpec extends SparkSpec {
       s"distributed Aitken must converge inside the pre-CG budget: ${dist.sweeps}")
     assert(math.abs(slopeOf(dist) - slopeOf(plain)) < 1e-10,
       s"${slopeOf(dist)} vs ${slopeOf(plain)}")
+
+    // frame regime (FEs over the broadcast gate): the same
+    // extrapolation from the probe's means frames
+    spark.conf.set("spark.graft.fe.broadcastGroupLimit", "15") // < 20 groups per FE
+    try {
+      val frame = FixedEffects.demeanFull(df, Seq("y", "x"), Seq("u", "t"),
+        maxSweeps = 4000, tol = 1e-11, collectCellLimit = 0)
+      info(s"frame-regime Aitken sweeps=${frame.sweeps}")
+      assert(frame.sweeps <= 10,
+        s"frame-regime Aitken must converge inside the pre-CG budget: ${frame.sweeps}")
+      assert(math.abs(slopeOf(frame) - slopeOf(plain)) < 1e-10,
+        s"${slopeOf(frame)} vs ${slopeOf(plain)}")
+    } finally spark.conf.unset("spark.graft.fe.broadcastGroupLimit")
   }
 
   test("keyed-frame CG: a non-broadcastable FE dimension still gets the accelerated path, parity at 1e-8") {
@@ -830,10 +848,149 @@ class RegressionSpec extends SparkSpec {
     val drv = FixedEffects.fitWeighted(df, "y", Seq("x"), Seq("u", "t"), "w", tol = 1e-12)
     val dist = FixedEffects.fitWeighted(df, "y", Seq("x"), Seq("u", "t"), "w", tol = 1e-12,
       collectCellLimit = 0)
-    assert(math.abs(drv.coef(0) - dist.coef(0)) < 1e-8, s"${drv.coef(0)} vs ${dist.coef(0)}")
-    assert(drv.n == dist.n)
-    // weighted cell gram served both (no fact re-read): ssr parity too
-    assert(math.abs(drv.ols.ssr - dist.ols.ssr) < 1e-6 * math.max(1.0, drv.ols.ssr))
+    // the frame regime too: the broadcast gate squeezed below the 6 t-groups
+    spark.conf.set("spark.graft.fe.broadcastGroupLimit", "5")
+    val frame = try FixedEffects.fitWeighted(df, "y", Seq("x"), Seq("u", "t"), "w", tol = 1e-12,
+      collectCellLimit = 0) finally spark.conf.unset("spark.graft.fe.broadcastGroupLimit")
+    for (m <- Seq(dist, frame)) {
+      assert(math.abs(drv.coef(0) - m.coef(0)) < 1e-8, s"${drv.coef(0)} vs ${m.coef(0)}")
+      assert(drv.n == m.n)
+      // weighted cell gram served both (no fact re-read): ssr parity too
+      assert(math.abs(drv.ols.ssr - m.ols.ssr) < 1e-6 * math.max(1.0, drv.ols.ssr))
+    }
+  }
+
+  /** The path-graph panel of the CG-hybrid spec: unit u is observed at
+    * times u and u+1, so the cell solver runs Halperin sweeps, then the
+    * CG.
+    */
+  private def pathPanel = (for (u <- 0 until 50; t <- Seq(u, u + 1); rep <- 0 until 2) yield {
+    val x = math.sin(u * 1.3 + t * 0.7 + rep) * 2
+    (u, t, x, 2.0 * x + u.toDouble * 0.5 - t.toDouble * 0.3 + (rep - 0.5))
+  }).toDF("u", "t", "x", "y")
+
+  /** Jobs started while `body` runs. Sentinel jobs before and after
+    * bracket the count, so events still queued from earlier work are
+    * not counted and the count is complete when it is read.
+    */
+  private def countJobs[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    @volatile var counting = false
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case "__jobs_open" => counting = true
+          case "__jobs_close" => counting = false; done.countDown()
+          case _ => if (counting) jobs.incrementAndGet()
+        }
+    }
+    def sentinel(group: String): Unit = {
+      sc.setJobGroup(group, group)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(l)
+    try {
+      sentinel("__jobs_open")
+      val a = body
+      sentinel("__jobs_close")
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      (a, jobs.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("cell-RDD regime: a fit is bit-reproducible and sweeps like the driver regime") {
+    val df = pathPanel
+    def run() = {
+      val d = FixedEffects.demeanFull(df, Seq("y", "x"), Seq("u", "t"),
+        maxSweeps = 120, tol = 1e-9, collectCellLimit = 0)
+      val m = FixedEffects.fit(df, "y", Seq("x"), Seq("u", "t"),
+        maxSweeps = 120, tol = 1e-9, collectCellLimit = 0)
+      (m.coef.toSeq.map(java.lang.Double.doubleToRawLongBits), m.sweeps, d.sweeps,
+        d.cellGram.get.gram.toSeq.map(_.toSeq.map(java.lang.Double.doubleToRawLongBits)),
+        d.effects.get.map(_.collect().toSeq))
+    }
+    val a = run()
+    val b = run()
+    assert(a === b)
+    val local = FixedEffects.demeanFull(df, Seq("y", "x"), Seq("u", "t"), maxSweeps = 120, tol = 1e-9)
+    assert(a._3 === local.sweeps, "the cell-RDD regime runs the driver regime's solver")
+  }
+
+  test("cell-RDD regime: at most one Spark job per cell pass plus a setup constant; nothing left alive") {
+    val df = pathPanel
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    val lastBroadcast = (DriverBlocks.broadcastValues.keySet + -1L).max
+    val (m, jobs) = countJobs(FixedEffects.fit(df, "y", Seq("x"), Seq("u", "t"),
+      maxSweeps = 120, tol = 1e-9, collectCellLimit = 0))
+    // passes: K = 2 per Halperin sweep (at most 10 before the CG bail),
+    // one per CG iteration plus the warm-start matvec, and the setup
+    // (mass, b) and Gram passes
+    val halperin = math.min(m.sweeps, 10)
+    val passes = 2 * halperin + (if (m.sweeps > halperin) m.sweeps - halperin + 1 else 0) + 2
+    info(s"sweeps=${m.sweeps} jobs=$jobs pass bound=$passes")
+    assert(jobs <= passes + 8, s"$jobs jobs for at most $passes cell passes")
+    assert(sc.getPersistentRDDs.keySet === persisted, "the fit left persisted RDDs behind")
+    // the fit's own broadcasts (the key index and the pass parameters)
+    // still alive; an undestroyed one lingers until a GC hands it to the
+    // context cleaner, so look at once. Destruction is asynchronous: at
+    // most the index's and the last pass's removals may be in flight.
+    def alive = DriverBlocks.broadcastValues.collect {
+      case (id, _: Array[Array[Double]] | _: Array[java.util.Map[_, _]]) if id > lastBroadcast => id
+    }.toSet
+    val atReturn = alive
+    assert(atReturn.size <= 2, s"the fit left broadcasts alive: $atReturn")
+    eventually(timeout(Span(10, Seconds)))(assert(alive.isEmpty, s"broadcasts still alive: $alive"))
+  }
+
+  test("cell-RDD backend: one job per pass, and the driver receives O(groups) doubles per pass at any partition count") {
+    // 20 units × 5 periods, complete: range blocks on u touch all five t groups
+    val rows = for (u <- 0 until 20; t <- 0 until 5) yield {
+      val x = math.sin(u * 0.7 + t * 1.9) * 2
+      (u, t, x, 2.0 * x + u * 0.25 - t * 0.5 + math.cos(u * t + 0.3))
+    }
+    val cols = Seq("y", "x")
+    val cells = FixedEffects.cellStats(rows.toDF("u", "t", "x", "y"), cols, Seq("u", "t"), lit(1.0))
+      .persist()
+    val local = new LocalCells(cells.collect(), 2, 2)
+    val (effL, sweepsL) = FixedEffects.solveCells(local, 2, 500, 1e-12, accelerate = true)
+    val gramL = local.gram(effL)
+    for (parts <- Seq(3, 12, 40)) {
+      val p = new RddCells(cells.repartition(parts).rdd, 2, 2)
+      try {
+        val (eff, sweeps) = FixedEffects.solveCells(p, 2, 500, 1e-12, accelerate = true)
+        assert(sweeps === sweepsL)
+        for (f <- 0 until 2; e <- local.index(f).entrySet().asScala; c <- 0 until 2) {
+          val g = p.index(f).get(e.getKey).intValue
+          assert(math.abs(eff(f)(g)(c) - effL(f)(e.getValue.intValue)(c)) < 1e-10)
+        }
+        val v = Array.fill(2)(Array.tabulate(25)(j => math.sin(j.toDouble)))
+        val passes = Seq[() => Any](() => p.stepSums(0, eff), () => p.stepSums(1, eff),
+          () => p.matvec(v, Array(true, false)), () => p.gram(eff))
+        for (run <- passes) assert(countJobs(run())._2 === 1, s"$parts partitions")
+        val gram = p.gram(eff)
+        for (i <- 0 until 2; j <- 0 until 2) assert(math.abs(gram(i)(j) - gramL(i)(j)) < 1e-9)
+      } finally p.release()
+
+      // the reduce itself: every partition sends partials for all 20 + 5
+      // groups, yet the driver receives one dense slice per id range —
+      // (20 + 5) · stride doubles — summed in partition order
+      val stride = 3
+      val partials = spark.sparkContext.parallelize(0 until parts, parts).map { i =>
+        (Array(Array.range(0, 20), Array.range(0, 5)),
+          Array(Array.tabulate(20 * stride)(j => 1.0 / (i + j + 1)), Array.fill(5 * stride)(i + 0.5)))
+      }
+      val got = RddCells.keyedReduce(partials, Array(20, 5), stride, parts).collect()
+      assert(got.map(_._2.map(_.length).sum).sum === (20 + 5) * stride, s"$parts partitions")
+      val want = CellPasses.sumPartials(Array(20, 5), stride, partials.collect().toSeq)
+      val span = Array(20, 5).map(n => math.max((n + parts - 1) / parts, 1))
+      for ((r, dense) <- got; o <- 0 until 2; l <- dense(o).indices)
+        assert(dense(o)(l) == want(o)(r * span(o) * stride + l), s"$parts partitions, bucket $r")
+    }
+    cells.unpersist()
   }
 
   test("FeModel HC1: dense sandwich with the absorbed-dof scale") {

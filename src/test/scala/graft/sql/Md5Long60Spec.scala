@@ -45,4 +45,14 @@ class Md5Long60Spec extends SparkSpec {
     assert(!r(0).isNullAt(0))
     assert(r(1).isNullAt(0))
   }
+
+  test("md5Long60 on a non-binary column fails at analysis time") {
+    import spark.implicits._
+    import org.apache.spark.sql.graftbridge.Bridge
+    val strings = Seq("a", "b").toDF("s")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      strings.select(Bridge.column(graft.functions.Md5Long60Expr(Bridge.expr(col("s")))))
+    }
+    assert(e.getMessage.toUpperCase.contains("BINARY"), e.getMessage)
+  }
 }
