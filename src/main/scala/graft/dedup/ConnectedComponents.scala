@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Connected components over a near-duplicate pair graph — the step
   * that turns MinHash/SimHash/Jaccard PAIRS into duplicate CLUSTERS so
@@ -13,8 +14,9 @@ import org.apache.spark.sql.functions._
   * neighbors, then labels compress one hop (`comp ← comp's comp`), so
   * long chains converge in O(log diameter) rounds, not O(diameter).
   * Each round is two bounded shuffles (edges ⋈ labels, labels ⋈
-  * labels) over |E| and |V| rows; per-round lineage is truncated with
-  * the lazy-localCheckpoint pattern. This is the DataFrame form of the
+  * labels) over |E| and |V| rows; each round's labels are checkpointed
+  * (which also counts the changed labels) and the previous round's
+  * released. This is the DataFrame form of the
   * classic map-reduce CC algorithms (large-star/small-star family);
   * dedup graphs (dense small clusters) typically converge in 2–3
   * rounds.
@@ -37,25 +39,17 @@ object ConnectedComponents {
     // into the labels join. Keyed checkpoint, not persist: an
     // InMemoryRelation over an adaptive plan reports Unknown
     // partitioning, which would put the per-round exchange right back.
-    val sym = org.apache.spark.sql.graftbridge.Bridge.staticCheckpointKeyed(edges
+    val sym = Bridge.staticCheckpointKeyed(edges
       .select(col(src).cast("long").as("a"), col(dst).cast("long").as("b"))
       .union(edges.select(col(dst).cast("long").as("a"), col(src).cast("long").as("b")))
       .repartition(col("b"))
       .sortWithinPartitions("b"))
 
-    def checkpointRdd(d: DataFrame) =
-      d.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-
     var labels = sym.select(col("a").as("id")).distinct().withColumn("comp", col("id"))
-    val history = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
     var changed = 1L
     var iters = 0
     while (changed > 0 && iters < maxIters) {
       iters += 1
-      val t0 = System.nanoTime()
       // min over neighbors' labels
       val nbrMin = sym
         .join(labels.select(col("id").as("b"), col("comp").as("nbComp")), Seq("b"))
@@ -78,24 +72,17 @@ object ConnectedComponents {
           Seq("comp"),
           "left")
         .select(col("id"), coalesce(col("cc"), col("comp")).as("comp"), col("chg"))
-      val obs = org.apache.spark.sql.Observation()
-      val ck = org.apache.spark.sql.graftbridge.Bridge.iterCheckpoint(
-        jumped.observe(obs, count(when(col("chg"), lit(1))).as("changed")),
-        eager = true)
-      changed = obs.get("changed").asInstanceOf[Long]
-      labels = ck.select(col("id"), col("comp"))
-      history += labels
-      // the eager checkpoint above was this round's only action; upd's
-      // cache served the self-join inside it and is dead now
+      val ck = Bridge.checkpointStep(
+        jumped, "cc-round", Seq(count(when(col("chg"), lit(1))).as("changed")), keyed = false)
+      changed = ck.metrics.getLong(0)
+      // the eager checkpoint above was this round's only action: upd's
+      // cache and the previous round's labels (round 1's are a plan over
+      // `sym`, which stays) are dead now
       upd.unpersist(false)
-      if (history.length >= 3)
-        checkpointRdd(history.remove(0)).foreach(_.unpersist(false))
-      if (verbose)
-        System.err.println(
-          f"[cc] iter $iters: changed=$changed ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      if (iters > 1) Bridge.releaseCheckpoints(labels)
+      labels = ck.leaf.select(col("id"), col("comp"))
     }
-    history.dropRight(1).foreach(d => checkpointRdd(d).foreach(_.unpersist(false)))
-    checkpointRdd(sym).foreach(_.unpersist(false))
+    Bridge.releaseCheckpoints(sym)
     labels.select(col("id"), col("comp"))
   }
 }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * each round joins the LAST frontier against the edge list, keeps
   * genuinely new nodes (left_anti vs settled — a node's first
   * discovery IS its minimum distance, the BFS invariant), unions them
-  * in at dist+1, and checkpoints through `Bridge.freshLeaf` (the FE
-  * lineage lesson). Per round: one equi-join + one anti-join + one
+  * in at dist+1, and checkpoints through `Bridge.checkpointStep` (the
+  * FE lineage lesson). Per round: one equi-join + one anti-join + one
   * distinct, all shuffled on the node key — frontier-sized, never
   * corpus-rescanned. Terminates at `maxHops` or an empty frontier,
   * whichever first. Unreached nodes are absent from the output (the
@@ -62,20 +62,19 @@ object Bfs {
         .distinct()
         .join(settled, Seq("node"), "left_anti")
         .withColumn("dist", lit(hop + 1))
-      Bridge.explainIter(nextPlan, "bfs-hop")
-      val obs = org.apache.spark.sql.Observation()
-      val next = Bridge.iterCheckpointKeyed(
-        nextPlan.observe(obs, count(lit(1)).as("n")))
-      if (obs.get("n").asInstanceOf[Long] == 0L) {
+      val next = Bridge.checkpointStep(nextPlan, "bfs-hop", Seq(count(lit(1)).as("n")))
+      if (next.metrics.getLong(0) == 0L) {
         // the empty frontier leaf joins nothing: free its blocks
-        Bridge.releaseCheckpoints(next)
+        Bridge.releaseCheckpoints(next.leaf)
         done = true
       } else {
-        settled = settled.unionByName(next)
-        frontier = next
+        settled = settled.unionByName(next.leaf)
+        frontier = next.leaf
       }
       hop += 1
     }
+    // `settled` reads every hop's leaf; only the edge frame is dead
+    Bridge.releaseCheckpoints(e)
     settled
   }
 }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** HITS hubs-and-authorities (Kleinberg 1999) — the DIRECTED-role
   * companion to [[PageRank]]: where PageRank assigns one authority
@@ -14,8 +15,9 @@ import org.apache.spark.sql.functions._
   *
   * with L2 normalization each half-step (unnormalized HITS diverges).
   * Fixed iteration count for cross-engine replay; per half-step: ONE
-  * equi-join + groupBy on node keys, a 1-row norm aggregate, and the
-  * score frame localCheckpoint'ed (the FE lineage lesson). Scores are
+  * equi-join + groupBy on node keys and ONE action — the score frame's
+  * checkpoint (the FE lineage lesson), which also observes the squared
+  * norm the half-step divides by. Scores are
   * maintained over the FULL node set (zero-filled) so the norm and the
   * output cover isolated roles.
   */
@@ -32,14 +34,13 @@ object Hits {
   ): DataFrame = {
     val eRaw = edges.select(col(src).cast("string").as("src"), col(dst).cast("string").as("dst"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Bridge.truncate(_))
     require(!eRaw.isEmpty, "Hits.run: empty edge set (no hubs or authorities to score)")
     // TWO static copies of the edge frame, one per half-step join key,
     // each exchanged + sorted ONCE (opt guide §2.4): the score frames
     // end every half-step hash-partitioned by node (the groupBy/join
     // below), so both per-iteration joins are co-partitioned — zero
     // Exchange and zero edge-side Sort inside the loop.
-    import org.apache.spark.sql.graftbridge.Bridge
     val eBySrc = Bridge.staticCheckpointKeyed(
       eRaw.repartition(col("src")).sortWithinPartitions("src"))
     val eByDst = Bridge.staticCheckpointKeyed(
@@ -47,13 +48,9 @@ object Hits {
     val nodes = Bridge.staticCheckpointKeyed(eRaw.select(col("src").as("node"))
       .union(eRaw.select(col("dst").as("node")))
       .distinct()) // hash-partitioned by node
-    def ckRdd(d: DataFrame) =
-      d.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
     // eRaw only existed to derive the keyed copies above (r12 advice:
     // it tripled the resident edge footprint for the whole run)
-    ckRdd(eRaw).foreach(_.unpersist(false))
+    Bridge.releaseCheckpoints(eRaw)
 
     var hub = Bridge.iterCheckpointKeyed(nodes.withColumn("hub", lit(1.0)))
     var auth = Bridge.iterCheckpointKeyed(nodes.withColumn("auth", lit(0.0)))
@@ -71,22 +68,22 @@ object Hits {
       val raw = scores.join(edgeCopy, col("node") === col(joinKey))
         .groupBy(col(outKey).as("node"))
         .agg(sum(scoreCol).as("v"))
-      val obs = org.apache.spark.sql.Observation()
-      val ck = Bridge.iterCheckpointKeyed(
-        nodes.join(raw, Seq("node"), "left")
-          .na.fill(0.0, Seq("v"))
-          .observe(obs, sum(col("v") * col("v")).as("ss")))
-      val nrm = math.sqrt(obs.get("ss").asInstanceOf[Double])
-      ck.select(col("node"), (col("v") / lit(nrm)).as(outCol))
+      val ck = Bridge.checkpointStep(
+        nodes.join(raw, Seq("node"), "left").na.fill(0.0, Seq("v")),
+        s"hits-$outCol",
+        Seq(sum(col("v") * col("v")).as("ss")))
+      val nrm = math.sqrt(ck.metrics.getDouble(0))
+      ck.leaf.select(col("node"), (col("v") / lit(nrm)).as(outCol))
     }
     for (_ <- 0 until iters) {
-      val prevAuth = auth
-      auth = halfStep(hub, "hub", eBySrc, "src", "dst", "auth")
-      ckRdd(prevAuth).foreach(_.unpersist(false))
-      val prevHub = hub
-      hub = halfStep(auth, "auth", eByDst, "dst", "src", "hub")
-      ckRdd(prevHub).foreach(_.unpersist(false))
+      val nextAuth = halfStep(hub, "hub", eBySrc, "src", "dst", "auth")
+      Bridge.releaseCheckpoints(auth)
+      auth = nextAuth
+      val nextHub = halfStep(auth, "auth", eByDst, "dst", "src", "hub")
+      Bridge.releaseCheckpoints(hub)
+      hub = nextHub
     }
+    Seq(eBySrc, eByDst, nodes).foreach(Bridge.releaseCheckpoints)
     hub.join(auth, Seq("node"))
   }
 }

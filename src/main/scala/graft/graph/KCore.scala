@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** k-core decomposition by synchronous peeling (Seidman 1983, the
   * Batagelj–Zaveršnik fixpoint form): repeatedly delete every node
@@ -46,14 +47,13 @@ object KCore {
       maxRounds: Int = 20
   ): DataFrame = {
     require(k >= 1, "k must be >= 1")
-    import org.apache.spark.sql.graftbridge.Bridge
     val e0 = edges
       .select(
         least(col(src).cast("string"), col(dst).cast("string")).as("u"),
         greatest(col(src).cast("string"), col(dst).cast("string")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(Bridge.truncate(_))
     // TWO static copies of the canonical edge frame, one per peel-join
     // orientation, each exchanged + sorted ONCE: the peeled set is
     // always hash-partitioned by node (a filter of the degree frame),
@@ -66,38 +66,31 @@ object KCore {
     // both copies are materialized: the canonical frame is never read again
     Bridge.releaseCheckpoints(e0)
 
-    def checkpointRdd(d: DataFrame) =
-      d.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-    // (frame-with-observed-peel-count): one action per round
-    def ckWithPeel(d: DataFrame): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = Bridge.iterCheckpointKeyed(
-        d.observe(obs, count(when(col("degree") < k, lit(1))).as("peel")))
-      (ck, obs.get("peel").asInstanceOf[Long])
-    }
+    // the degree checkpoint observes the next round's peel count: one
+    // action per round
+    def checkpointWithPeel(d: DataFrame): Bridge.Checkpointed =
+      Bridge.checkpointStep(d, "kcore-degrees", Seq(count(when(col("degree") < k, lit(1))).as("peel")))
 
     // full-graph degrees once: u-side + v-side appearance counts,
     // combined by a co-partitioned full-outer join (exact integers)
     val degU0 = eByU.groupBy(col("u").as("node")).agg(count(lit(1)).as("du"))
     val degV0 = eByV.groupBy(col("v").as("node")).agg(count(lit(1)).as("dv"))
-    var (degrees, peelCount) = ckWithPeel(
+    var degrees = checkpointWithPeel(
       degU0.join(degV0, Seq("node"), "full_outer")
         .select(
           col("node"),
           (coalesce(col("du"), lit(0L)) + coalesce(col("dv"), lit(0L))).as("degree")))
 
     var rounds = 0
-    while (peelCount > 0) {
+    while (degrees.metrics.getLong(0) > 0) {
       rounds += 1
       require(rounds <= maxRounds,
         s"k-core did not converge within $maxRounds rounds — raise maxRounds " +
           "(and the oracle's unroll depth with it)")
       // this round's peel set and survivors — both filters of the
       // checkpointed degree frame, both hash(node)
-      val peeled = degrees.where(col("degree") < k)
-      val survivors = degrees.where(col("degree") >= k)
+      val peeled = degrees.leaf.where(col("degree") < k)
+      val survivors = degrees.leaf.where(col("degree") >= k)
       // edges lost to the peeled set, counted per SURVIVING endpoint:
       // an edge (u,v) with v peeled decrements u, and vice versa; an
       // edge between two peeled nodes decrements both (both rows drop
@@ -119,13 +112,11 @@ object KCore {
         .select(
           col("node"),
           (col("degree") - coalesce(col("lost"), lit(0L))).as("degree"))
-      org.apache.spark.sql.graftbridge.Bridge.explainIter(degPlan, "kcore-degrees")
-      val prev = degrees
-      val (ck, pc) = ckWithPeel(degPlan)
-      degrees = ck
-      peelCount = pc
-      checkpointRdd(prev).foreach(_.unpersist(false))
+      val next = checkpointWithPeel(degPlan)
+      Bridge.releaseCheckpoints(degrees.leaf)
+      degrees = next
     }
-    degrees
+    Seq(eByU, eByV).foreach(Bridge.releaseCheckpoints)
+    degrees.leaf
   }
 }

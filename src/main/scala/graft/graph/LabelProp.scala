@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Synchronous label propagation (Raghavan 2007) — community detection
   * by majority vote: each node adopts the most frequent label among its
@@ -21,8 +22,8 @@ import org.apache.spark.sql.functions._
   * Per iteration: ONE labels⋈edges equi-join on the source key, a
   * (node, label) count aggregate with map-side combine, and a
   * min(struct(−count, label)) argmax — all shuffles on node keys; the
-  * label frame is localCheckpoint'ed each iteration (the FE lineage
-  * lesson).
+  * label frame is checkpointed each iteration (the FE lineage lesson)
+  * and the superseded one released.
   */
 object LabelProp {
 
@@ -48,13 +49,13 @@ object LabelProp {
     // per sweep only the two partial-aggregated vote exchanges remain
     // (see the loop). All-integer counts + min(struct) argmax —
     // order-free, bit-identical.
-    val e = org.apache.spark.sql.graftbridge.Bridge.staticCheckpointKeyed(
+    val e = Bridge.staticCheckpointKeyed(
       half.union(half.select(col("v"), col("u")))
         .distinct()
         .repartition(col("u"))
         .sortWithinPartitions("u")) // consumed every sweep
 
-    var labels = org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(
+    var labels = Bridge.iterCheckpointKeyed(
       e.select(col("u").as("node")).distinct()
         .withColumn("label", col("node"))) // hash-partitioned by node
 
@@ -76,9 +77,11 @@ object LabelProp {
         .groupBy(col("v").as("node"))
         .agg(min(struct((-col("c")).as("nc"), col("label").as("l"))).as("w"))
         .select(col("node"), col("w.l").as("label"))
-      org.apache.spark.sql.graftbridge.Bridge.explainIter(nextLabels, "labelprop-sweep")
-      labels = org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(nextLabels)
+      val next = Bridge.checkpointStep(nextLabels, "labelprop-sweep").leaf
+      Bridge.releaseCheckpoints(labels)
+      labels = next
     }
+    Bridge.releaseCheckpoints(e)
     labels
   }
 }

@@ -18,11 +18,12 @@ import org.apache.spark.sql.graftbridge.Bridge
   * to 1; the spec pins Σr = 1 every iteration).
   *
   * Scale shape per iteration: ONE equi-join ranks⋈edges on the source
-  * key, one groupBy(dst), a 1-row dangling aggregate, a left join back
-  * to the node set for zero-indegree nodes — all shuffles on the node
-  * key. The rank frame is truncated each iteration through
-  * [[org.apache.spark.sql.graftbridge.Bridge.iterCheckpoint]] —
-  * localCheckpoint by default, reliable checkpoint under
+  * key, one groupBy(dst), a left join back to the node set for
+  * zero-indegree nodes — all shuffles on the node key — and ONE action:
+  * the rank frame's checkpoint through
+  * [[org.apache.spark.sql.graftbridge.Bridge.checkpointStep]], which
+  * also observes the dangling mass the next iteration applies. The
+  * checkpoint is localCheckpoint by default, reliable checkpoint under
   * `spark.graft.checkpoint.reliable` (the FE
   * lesson: an uncheckpointed iterative frame's plan doubles per sweep
   * and the analyzer, not the cluster, becomes the bottleneck).
@@ -31,6 +32,14 @@ import org.apache.spark.sql.graftbridge.Bridge
   * iterations in SQL).
   */
 object PageRank {
+
+  /** Checkpoints a rank frame, observing Σ rank over sinks. */
+  private def checkpointWithDangling(d: DataFrame): Bridge.Checkpointed =
+    Bridge.checkpointStep(d, "pagerank", Seq(sum(when(col("is_sink"), col("rank"))).as("dmass")))
+
+  /** The observed dangling mass; with no sinks the sum is null, i.e. 0. */
+  private def danglingMass(ranks: Bridge.Checkpointed): Double =
+    if (ranks.metrics.isNullAt(0)) 0.0 else ranks.metrics.getDouble(0)
 
   /** (node, rank) after `iters` iterations over `edges(src, dst)`.
     * Multi-edges should be pre-deduplicated by the caller if unwanted;
@@ -75,28 +84,13 @@ object PageRank {
     // the dangling mass (rank parked on sinks) is an observed metric of
     // the rank frame's OWN checkpoint action (r13): each iteration's
     // checkpoint reports Σ rank over sinks, and the NEXT iteration
-    // applies it as a driver literal — the former per-iteration dangling
-    // aggregate subtree + 1-row broadcast build are gone, one action per
-    // iteration. Same doubles: the literal is the identical sum the
-    // broadcast column carried (summation order was scheduler-dependent
-    // before too), divided by the same n.
-    def ckWithDangling(d: DataFrame): (DataFrame, Double) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = Bridge.iterCheckpointKeyed(
-        d.observe(obs, sum(when(col("is_sink"), col("rank"))).as("dmass")))
-      val dm = obs.get("dmass") match {
-        case dd: java.lang.Double => dd.doubleValue
-        case _ => 0.0 // no sinks: the former coalesce(sum, 0.0)
-      }
-      (ck, dm)
-    }
-    var (ranks, dmass) = ckWithDangling(nodes.withColumn("rank", lit(1.0 / n)))
-    def ckRdd(d: DataFrame) =
-      d.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
+    // applies it as a driver literal — no separate dangling aggregate,
+    // one action per iteration. Same doubles: the literal is the
+    // identical sum the former broadcast column carried, divided by the
+    // same n.
+    var ranks = checkpointWithDangling(nodes.withColumn("rank", lit(1.0 / n)))
     for (it <- 1 to iters) {
-      val contribs = ranks.where(!col("is_sink"))
+      val contribs = ranks.leaf.where(!col("is_sink"))
         .join(e, col("node") === col("src"))
         .groupBy(col("dst").as("node"))
         .agg(sum(col("rank") / col("outdeg")).as("contrib"))
@@ -107,13 +101,13 @@ object PageRank {
           col("node"),
           col("is_sink"),
           (lit((1.0 - damping) / n) +
-            lit(damping) * (col("contrib") + lit(dmass) / lit(n))).as("rank"))
-      val prev = ranks
-      val (ck, dm) = ckWithDangling(next)
-      ranks = ck; dmass = dm
-      ckRdd(prev).foreach(_.unpersist(false))
+            lit(damping) * (col("contrib") + lit(danglingMass(ranks)) / lit(n))).as("rank"))
+      val step = checkpointWithDangling(next)
+      Bridge.releaseCheckpoints(ranks.leaf)
+      ranks = step
     }
-    ranks.select("node", "rank")
+    Seq(e, nodes).foreach(Bridge.releaseCheckpoints)
+    ranks.leaf.select("node", "rank")
   }
 
   /** Personalized PageRank — restart mass goes to a SEED distribution
@@ -127,7 +121,7 @@ object PageRank {
     *   r ← (1−d)·s + d·(Σ_in r/outdeg + danglingMass·s)
     *
     * Same per-iteration shape as [[run]]: one equi-join, one groupBy,
-    * a 1-row dangling aggregate, localCheckpoint. Kept as its own loop
+    * one checkpoint action observing the dangling mass. Kept as its own loop
     * rather than expressing run() through it: run()'s `(1−d)/n` and
     * PPR's `(1−d)·(1/n)` round differently in IEEE arithmetic and
     * q166's replay pins run()'s exact trajectory.
@@ -174,24 +168,10 @@ object PageRank {
 
     // same observed-dangling fold as run(): one action per iteration,
     // the mass applied as a driver literal next iteration
-    def ckWithDangling(d: DataFrame): (DataFrame, Double) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = Bridge.iterCheckpointKeyed(
-        d.observe(obs, sum(when(col("is_sink"), col("rank"))).as("dmass")))
-      val dm = obs.get("dmass") match {
-        case dd: java.lang.Double => dd.doubleValue
-        case _ => 0.0
-      }
-      (ck, dm)
-    }
-    var (ranks, dmass) = ckWithDangling(
+    var ranks = checkpointWithDangling(
       nodes.select(col("node"), col("sw"), col("is_sink"), col("sw").as("rank")))
-    def ckRdd(d: DataFrame) =
-      d.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
     for (it <- 1 to iters) {
-      val contribs = ranks.where(!col("is_sink"))
+      val contribs = ranks.leaf.where(!col("is_sink"))
         .join(e, col("node") === col("src"))
         .groupBy(col("dst").as("node"))
         .agg(sum(col("rank") / col("outdeg")).as("contrib"))
@@ -203,12 +183,12 @@ object PageRank {
           col("sw"),
           col("is_sink"),
           (lit(1.0 - damping) * col("sw") +
-            lit(damping) * (col("contrib") + lit(dmass) * col("sw"))).as("rank"))
-      val prev = ranks
-      val (ck, dm) = ckWithDangling(next)
-      ranks = ck; dmass = dm
-      ckRdd(prev).foreach(_.unpersist(false))
+            lit(damping) * (col("contrib") + lit(danglingMass(ranks)) * col("sw"))).as("rank"))
+      val step = checkpointWithDangling(next)
+      Bridge.releaseCheckpoints(ranks.leaf)
+      ranks = step
     }
-    ranks.select("node", "rank")
+    Seq(e, nodes).foreach(Bridge.releaseCheckpoints)
+    ranks.leaf.select("node", "rank")
   }
 }

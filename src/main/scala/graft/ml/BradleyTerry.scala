@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Bradley–Terry pairwise-preference model (Bradley & Terry 1952) via
   * Hunter's MM algorithm (Hunter 2004) — strength scores from win/loss
@@ -55,8 +56,7 @@ object BradleyTerry {
     // iteration i joins iteration i-1's checkpoints, and carried
     // originStats otherwise compound per iteration (the Lda lesson,
     // SURVEY §8g)
-    def ck(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(df)
+    def ck(df: DataFrame): DataFrame = Bridge.iterCheckpointKeyed(df)
 
     // n_ij games per unordered pair + per-item win totals; the pair
     // frame is exchanged + sorted ONCE on the first per-sweep join key
@@ -70,11 +70,11 @@ object BradleyTerry {
       .agg(count(lit(1)).cast("double").as("n"))
       .repartition(col("i"))
       .sortWithinPartitions("i")
-      .transform(org.apache.spark.sql.graftbridge.Bridge.staticCheckpointKeyed(_))
+      .transform(Bridge.staticCheckpointKeyed(_))
     val wins = duels
       .groupBy(col(winnerCol).cast("string").as("item"))
       .agg(count(lit(1)).cast("double").as("wins"))
-    val items = org.apache.spark.sql.graftbridge.Bridge.staticCheckpointKeyed(
+    val items = Bridge.staticCheckpointKeyed(
       games.select(col("i").as("item"))
         .union(games.select(col("j").as("item")))
         .distinct()
@@ -104,8 +104,7 @@ object BradleyTerry {
         .join(pi.select(col("item").as("i"), col("pi").as("pi_i")), Seq("i"))
         .join(pi.select(col("item").as("j"), col("pi").as("pi_j")), Seq("j"))
         .withColumn("d", col("n") / (col("pi_i") + col("pi_j")))
-        .transform(df => org.apache.spark.sql.graftbridge.Bridge
-          .iterCheckpointKeyed(df, eager = false))
+        .transform(Bridge.iterCheckpointKeyed(_, eager = false))
       val dJ = gp.groupBy(col("j").as("item")).agg(sum("d").as("dj"))
       val dI = gp.groupBy(col("i").as("item")).agg(sum("d").as("di"))
       val denom = dI.join(dJ, Seq("item"), "full_outer")
@@ -126,14 +125,14 @@ object BradleyTerry {
         else
           when(mm === 0.0 || col("pi") === 0.0, mm)
             .otherwise(col("pi") * relax(mm / col("pi")))
-      pi = ck(pi
+      val next = ck(pi
         .join(denom, Seq("item"), "left")
         .withColumn("pi_new", stepped)
         .select(col("item"), col("wins"), col("pi_new").as("pi")))
-      // the sweep's pair blocks are dead once π is materialized
-      gp.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(false))
+      // the sweep's pair blocks and the superseded π are dead once the
+      // next π is materialized
+      Seq(gp, pi).foreach(Bridge.releaseCheckpoints)
+      pi = next
     }
     val tot = pi.agg(sum("pi")).head().getDouble(0)
     // rank on the QUANTIZED strength (ties by item): sub-1e-6 strength
@@ -148,6 +147,9 @@ object BradleyTerry {
       .withGlobalRowNumber(items.join(normed, Seq("item")), "rank",
         Seq(col("pi").desc, col("item")))
       .withColumn("rank", col("rank").cast("int"))
+    // the rank step's eager checkpoint holds every π and items row the
+    // output reads
+    Seq(items, pi).foreach(Bridge.releaseCheckpoints)
     val totalGames = games.select(col("i").as("item"), col("n"))
       .union(games.select(col("j").as("item"), col("n")))
       .groupBy("item").agg(sum("n").cast("long").as("games"))

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Binary-classifier evaluation over a score column — the measurement
   * side of the model-based curation operators
@@ -48,15 +49,14 @@ object Eval {
     // the min/max fold into the checkpoint action as observed metrics
     // (opt guide §1.2: the former 3 full scans + 1 extra job are now one
     // scan + two tiny jobs over the value-distinct frame).
-    val obs = org.apache.spark.sql.Observation()
-    val counts = org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(
+    val Bridge.Checkpointed(counts, mm) = Bridge.checkpointStep(
       df.groupBy(col(scoreCol).cast("double").as("s"))
         .agg(
           sum(col(labelCol).cast("int")).cast("long").as("pos"),
-          sum(lit(1) - col(labelCol).cast("int")).cast("long").as("neg"))
-        .observe(obs, min(col("s")).as("lo"), max(col("s")).as("hi")))
-    val mm = obs.get
-    val (lo, hi) = (mm("lo").asInstanceOf[Double], mm("hi").asInstanceOf[Double])
+          sum(lit(1) - col(labelCol).cast("int")).cast("long").as("neg")),
+      "rank-sum-counts",
+      Seq(min(col("s")).as("lo"), max(col("s")).as("hi")))
+    val (lo, hi) = (mm.getAs[Double](0), mm.getAs[Double](1))
     val width = if (hi > lo) (hi - lo) / buckets else 1.0
     val bucketed = counts.withColumn(
       "b", least(floor((col("s") - lit(lo)) / lit(width)), lit(buckets - 1)).cast("int"))
@@ -88,9 +88,7 @@ object Eval {
         sum((col("pos") + col("neg")).cast("double") * (col("pos") + col("neg")) *
           (col("pos") + col("neg")) - (col("pos") + col("neg"))).as("ties"))
       .head()
-    counts.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(false))
+    Bridge.releaseCheckpoints(counts)
     (row.getDouble(0), row.getLong(1), row.getLong(2), row.getDouble(3))
   }
 

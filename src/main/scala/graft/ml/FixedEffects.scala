@@ -762,10 +762,7 @@ object FixedEffects {
       feGroupCount: Map[String, Long]
   ): Demeaned = {
     val k = cols.length
-    def checkpointRdd(d: DataFrame) =
-      d.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
+    import org.apache.spark.sql.graftbridge.Bridge
 
     // running residual sums per cell, seeded with the raw sums
     var cur = (0 until k).foldLeft(cells) { (acc, i) => acc.withColumn(s"__r_$i", col(s"__s_$i")) }
@@ -816,11 +813,10 @@ object FixedEffects {
         // the next one. EAGER so the history release below never drops
         // an unmaterialized checkpoint a later stage must recompute
         // through.
-        cur = timed(s"checkpoint@sweep $sweeps")(
-          org.apache.spark.sql.graftbridge.Bridge.truncate(cur))
+        cur = timed(s"checkpoint@sweep $sweeps")(Bridge.truncate(cur))
         history += cur
         if (history.length >= 3)
-          checkpointRdd(history.remove(0)).foreach(_.unpersist(false))
+          Bridge.releaseCheckpoints(history.remove(0))
         // the checkpoint job populated this sweep's means caches, so the
         // probe (max |REAL step mean| across the K means frames) reads
         // cache
@@ -897,7 +893,7 @@ object FixedEffects {
                 .select(
                   col(fe) +: (0 until k).map(i =>
                     (col(s"__mean_$i") * c0 + col(s"__pm_$i") * c1).as(s"__mean_$i")): _*)
-                .transform(org.apache.spark.sql.graftbridge.Bridge.truncate(_))
+                .transform(Bridge.truncate(_))
               // flag=false: applied to the effects (so the effect-table
               // union-sum and the CG warm start include it) but never a
               // probe's convergence evidence
@@ -933,7 +929,6 @@ object FixedEffects {
       // groupBy per FE. Preconditioner (z = r / groupMass) and stopping
       // rule (max |r_g / n_g| < tol·scale) are the cell solver's
       // exactly; regime parity is spec-pinned at 1e-8.
-      import org.apache.spark.sql.graftbridge.Bridge
       val K = fes.length
       // pre-partition on the LARGEST non-broadcast dimension (by the
       // gate's cardinality probe): with two oversized FEs the loop's
@@ -1026,9 +1021,9 @@ object FixedEffects {
               (r / col("__gn")).as(s"__p_$i"))
           }: _*))
       }
-      checkpointRdd(withT0).foreach(_.unpersist(false))
+      Bridge.releaseCheckpoints(withT0)
       // the b/x0 frames only feed the (now-materialized) state init
-      st0.foreach(d => checkpointRdd(d).foreach(_.unpersist(false)))
+      st0.foreach(Bridge.releaseCheckpoints)
       // in-loop release: a CG iteration only ever reads the PREVIOUS
       // generation's state, so generation i−2 frees as soon as i lands
       // (the `history` pattern; a billion-group FE's state frame is too
@@ -1094,10 +1089,10 @@ object FixedEffects {
               }
             }: _*))
         }
-        checkpointRdd(withT).foreach(_.unpersist(false))
+        Bridge.releaseCheckpoints(withT)
         genHistory += s1
         if (genHistory.length >= 3)
-          genHistory.remove(0).foreach(d => checkpointRdd(d).foreach(_.unpersist(false)))
+          genHistory.remove(0).foreach(Bridge.releaseCheckpoints)
         val (rz2, resid) = colScalars(s1)
         val beta = Array.fill(k)(0.0)
         (0 until k).foreach { c =>
@@ -1143,8 +1138,8 @@ object FixedEffects {
               .as(s"__r_$i")): _*)
         .transform(Bridge.truncate(_))
       history += cur
-      cgFrames.foreach(d => checkpointRdd(d).foreach(_.unpersist(false)))
-      checkpointRdd(cellsCg).foreach(_.unpersist(false))
+      cgFrames.foreach(Bridge.releaseCheckpoints)
+      Bridge.releaseCheckpoints(cellsCg)
     }
 
     // per-cell total effect Σ_f a_f = (sum − residual) / n, joined onto
@@ -1190,11 +1185,12 @@ object FixedEffects {
       timed(s"eff table $fe")(t.count())
       t
     }
-    history.foreach(d => checkpointRdd(d).foreach(_.unpersist(false)))
-    meansHistory.foreach { case (_, _, _, m) =>
-      m.unpersist(false)
-      // Aitken correction frames are localCheckpoint leaves, not caches
-      checkpointRdd(m).foreach(_.unpersist(false))
+    history.foreach(Bridge.releaseCheckpoints)
+    // step means are caches; the (unflagged) Aitken and CG correction
+    // frames are checkpoint leaves
+    meansHistory.foreach {
+      case (_, _, true, m) => m.unpersist(false)
+      case (_, _, false, m) => Bridge.releaseCheckpoints(m)
     }
     cells.unpersist(false)
 

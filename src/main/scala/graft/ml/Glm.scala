@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Distributed generalized linear models by iteratively reweighted least
   * squares (IRLS) — the maximum-likelihood extension of the reference's
@@ -777,7 +778,7 @@ object Glm {
     // aggs, each IRLS iteration) reads these blocks in parallel instead
     // of re-scanning a possibly single-split source serially
     val raw = timed("source checkpoint")(
-      spreadForIteration(df.select(needed.map(col): _*)).localCheckpoint())
+      Bridge.truncate(spreadForIteration(df.select(needed.map(col): _*))))
     // fast path: ONE grouping-sets pass answers "is any FE group
     // all-zero" — the common healthy-panel case then skips the
     // checkpoint-and-count drop loop entirely (profiled at ~1.4s of a
@@ -789,7 +790,7 @@ object Glm {
       else (raw, 0L))
     // the drop loop checkpoints its own filtered frame — raw's blocks
     // are dead the moment it returns a different one
-    if (base ne raw) raw.unpersist(false)
+    if (base ne raw) Bridge.releaseCheckpoints(raw)
 
     family.name match {
       case "gamma" =>
@@ -859,7 +860,7 @@ object Glm {
       val next = timed(s"iter $iter eta checkpoint")(fm.demeaned
         .withColumn("__eta", col("__z") - resid(fm))
         .select((needed :+ "__eta").map(col): _*)
-        .localCheckpoint(false))
+        .transform(Bridge.truncate(_, eager = false)))
       val muNew = fam.mu(col("__eta"))
       val devAggs =
         sum(fam.deviance(yc, muNew)) +:
@@ -877,7 +878,9 @@ object Glm {
           ok
         } else true
 
-      if (prev != null) prev.unpersist()
+      // `next` is materialized: the η frame two generations back fed only
+      // the superseded fit (at iteration 1 it is the source frame)
+      if (prev != null) Bridge.releaseCheckpoints(prev)
       prev = cur
       cur = next
       converged =
@@ -885,14 +888,10 @@ object Glm {
       dev = devNow
       iter += 1
     }
-    // `prev` stays materialized: the returned frame reads the last
-    // iteration's demeaned columns, whose lineage roots in it. The
-    // final `cur` η-frame is no longer referenced by anything, and the
-    // source blocks are superseded once an iteration checkpoint beyond
-    // the returned frame's root exists (a 1-iteration fit still roots
-    // in them — keep).
-    if (cur ne null) cur.unpersist()
-    if (iter > 1) base.unpersist(false)
+    // `prev` stays: the returned frame reads the last fit's demeaned
+    // columns, which root in it (after one iteration `prev` is the
+    // source frame itself). The final η checkpoint `cur` feeds nothing.
+    Bridge.releaseCheckpoints(cur)
     // final frame: the last iteration's demeaned design with μ
     // recomputed at the converged β (η' = z − (z̃ − x̃'β); the x̃ columns
     // move O(tol) per late iteration — the standard IRLS-sandwich
@@ -932,7 +931,7 @@ object Glm {
   private[ml] def dropSeparatedGroups(
       df: DataFrame, y: String, fes: Seq[String]): (DataFrame, Long) = {
     val yc = col(y).cast("double")
-    var cur = df.localCheckpoint()
+    var cur = Bridge.truncate(df)
     val n0 = cur.count()
     var n = n0
     var changed = true
@@ -943,10 +942,10 @@ object Glm {
           .select(col(fe))
         step = step.join(broadcast(ok), Seq(fe), "left_semi")
       }
-      val next = step.localCheckpoint()
+      val next = Bridge.truncate(step)
       val nNext = next.count()
       changed = nNext != n
-      cur.unpersist()
+      Bridge.releaseCheckpoints(cur)
       cur = next
       n = nNext
     }

@@ -14,9 +14,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Each sweep is two keyed aggregates + two joins over the CELL frame
   * (contingency-sized: |rows| × |cols| cells, margin-sized sums —
   * never sample-row-sized; collapse the sample to cells first). The
-  * frame is `localCheckpoint`ed through [[Bridge.freshLeaf]] every
-  * sweep so 20 iterations stay constant-cost (the FixedEffects loop
-  * discipline). IPF is contractive on positive cells, so cross-engine
+  * frame is checkpointed through [[Bridge.checkpointStep]] every
+  * fourth sweep so 20 iterations stay constant-cost (the FixedEffects
+  * loop discipline). IPF is contractive on positive cells, so cross-engine
   * summation-order noise (~1e-16/sweep) stays ~1e-13 — DuckDB replays
   * the whole loop as a recursive CTE and matches at the 6dp quantizer.
   *
@@ -81,11 +81,14 @@ object Raking {
       // checkpoint every FOURTH sweep (and the last): with the linear
       // window-chain plan, four stacked sweeps stay a few hundred plan
       // nodes — the former join shape quadrupled per sweep and needed
-      // truncation every second sweep
+      // truncation every second sweep. The leaf it supersedes (none
+      // before the first checkpoint: `cur` is then a plan over the
+      // caller's frames) is released once the new one exists.
       cur =
         if (it % 4 == 0 || it == iters) {
-          Bridge.explainIter(swept, "raking-sweep")
-          Bridge.freshLeaf(swept.localCheckpoint())
+          val next = Bridge.checkpointStep(swept, "raking-sweep", keyed = false).leaf
+          if (it > 4) Bridge.releaseCheckpoints(cur)
+          next
         } else swept
     }
     cur.select(

@@ -233,7 +233,7 @@ object RandomEffects {
     val p =
       if (h.isNaN) Double.NaN
       else graft.functions.NormalDist.chiSqUpperTail(h, k)
-    g.unpersist(false)
+    org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoints(g)
     ModelK(xCols, bRe, aRe, bFe, math.sqrt(sigU2), math.sqrt(sigE2),
       d2("thmin"), d2("thmax"), h, k, p, math.round(n), math.round(gc))
   }

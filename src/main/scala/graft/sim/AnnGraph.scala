@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.functions.{FloatVec, TopK}
 
@@ -43,14 +44,6 @@ object AnnGraph {
   /** (id, vec, __nrm) — norms hoisted ONCE per row, never per edge. */
   private def withNorm(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
     corpus.select(col(idCol), col(vecCol), FloatVec.norm(col(vecCol)).as("__nrm"))
-
-  /** Underlying RDD of a localCheckpoint'ed frame, for releasing the
-    * blocks a superseded iteration state holds.
-    */
-  private def ckRdd(d: DataFrame) =
-    d.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
 
   /** Attach cosine scores to an (src, dst) candidate edge list — the only
     * stage where vectors move, and they move by equi-join on each
@@ -109,7 +102,7 @@ object AnnGraph {
       vecCol: String,
       k: Int
   ): (DataFrame, DataFrame) = {
-    val eD = org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(
+    val eD = Bridge.iterCheckpointKeyed(
       edges.select(col("src"), col("dst"))
         .repartition(col("dst"))
         .sortWithinPartitions("dst"))
@@ -194,16 +187,13 @@ object AnnGraph {
   ): DataFrame = {
     val v = withNorm(corpus, idCol, vecCol).persist()
     v.count()
-    var edges = org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(
+    var edges = Bridge.iterCheckpointKeyed(
       seedEdges(v, idCol, vecCol, k, dims, numPlanes, numTables))
     for (_ <- 0 until sweeps) {
       val (nextPlan, eD) = sweepOnce(edges, v, idCol, vecCol, k)
-      org.apache.spark.sql.graftbridge.Bridge.explainIter(nextPlan, "nn-descent-sweep")
-      val next = org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(nextPlan)
-      // release the superseded sweep's checkpoint blocks (and its
-      // dst-keyed adjacency copy), not just the CacheManager entries
-      ckRdd(eD).foreach(_.unpersist(false))
-      ckRdd(edges).foreach(_.unpersist(false))
+      val next = Bridge.checkpointStep(nextPlan, "nn-descent-sweep").leaf
+      // the superseded sweep and its dst-keyed adjacency copy are dead
+      Seq(eD, edges).foreach(Bridge.releaseCheckpoints)
       edges = next
     }
     v.unpersist(false)
@@ -287,8 +277,8 @@ object AnnGraph {
       val nextVisited = visited.unionByName(scored).localCheckpoint()
       // release the superseded accumulator AND the consumed frontier
       // (hop 1's frontier IS the initial visited — don't double-release)
-      ckRdd(visited).foreach(_.unpersist(false))
-      if (!(frontier eq visited)) ckRdd(frontier).foreach(_.unpersist(false))
+      Bridge.releaseCheckpoints(visited)
+      if (!(frontier eq visited)) Bridge.releaseCheckpoints(frontier)
       visited = nextVisited
       frontier = scored
     }
@@ -297,8 +287,8 @@ object AnnGraph {
       .perKey(visited.where(col("qid") =!= col("nid")), Seq("qid"), "cos_sim", "nid", k)
       .select(col("qid"), col("nid"), round(col("cos_sim"), 4).as("cos_sim"))
       .localCheckpoint()
-    if (!(frontier eq visited)) ckRdd(frontier).foreach(_.unpersist(false))
-    ckRdd(visited).foreach(_.unpersist(false))
+    if (!(frontier eq visited)) Bridge.releaseCheckpoints(frontier)
+    Bridge.releaseCheckpoints(visited)
     adj.unpersist(false)
     v.unpersist(false)
     out
@@ -348,15 +338,14 @@ object AnnGraph {
           .where(col("src") =!= col("dst"))
           .select("src", "dst"))
       .distinct()
-    var edges = org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(topKPerSrc(
+    var edges = Bridge.iterCheckpointKeyed(topKPerSrc(
       scoreEdges(candNew, v, idCol, vecCol).unionByName(graph.select("src", "dst", "cos_sim")),
       k))
     b.unpersist(false)
     for (_ <- 0 until sweeps) {
       val (nextPlan, eD) = sweepOnce(edges, v, idCol, vecCol, k)
-      val next = org.apache.spark.sql.graftbridge.Bridge.iterCheckpointKeyed(nextPlan)
-      ckRdd(eD).foreach(_.unpersist(false))
-      ckRdd(edges).foreach(_.unpersist(false))
+      val next = Bridge.checkpointStep(nextPlan, "nn-descent-sweep").leaf
+      Seq(eD, edges).foreach(Bridge.releaseCheckpoints)
       edges = next
     }
     v.unpersist(false)
@@ -422,11 +411,11 @@ object AnnGraph {
   ): Unit = {
     val gF = knnGraph(corpus, idCol, vecCol, dims, graphK, sweeps)
     writeIndex(gF, table, buckets)
-    ckRdd(gF).foreach(_.unpersist(false))
+    Bridge.releaseCheckpoints(gF)
     val coarse = corpus.where(pmod(xxhash64(col(idCol)), lit(coarseEvery.toLong)) === 0)
     val gC = knnGraph(coarse, idCol, vecCol, dims, graphK, sweeps)
     writeIndex(gC, s"${table}__coarse", math.max(1, buckets / coarseEvery))
-    ckRdd(gC).foreach(_.unpersist(false))
+    Bridge.releaseCheckpoints(gC)
   }
 
   /** [[topKHierarchical]] semantics over the persisted two-layer index
@@ -456,7 +445,7 @@ object AnnGraph {
       .localCheckpoint()
     val out =
       searchFrom(queries, readIndex(spark, table), corpus, idCol, vecCol, k, beam, hops, entryPairs)
-    ckRdd(entryPairs).foreach(_.unpersist(false))
+    Bridge.releaseCheckpoints(entryPairs)
     out
   }
 
@@ -545,11 +534,11 @@ object AnnGraph {
       k = fullEntries, beam = beam, hops = hops)
       .select(col("qid"), col("nid"))
       .localCheckpoint()
-    ckRdd(gC).foreach(_.unpersist(false))
+    Bridge.releaseCheckpoints(gC)
     val gF = knnGraph(corpus, idCol, vecCol, dims, graphK, sweeps)
     val out = searchFrom(queries, gF, corpus, idCol, vecCol, k, beam, hops, entryPairs)
-    ckRdd(gF).foreach(_.unpersist(false))
-    ckRdd(entryPairs).foreach(_.unpersist(false))
+    Bridge.releaseCheckpoints(gF)
+    Bridge.releaseCheckpoints(entryPairs)
     out
   }
 
@@ -571,7 +560,7 @@ object AnnGraph {
   ): DataFrame = {
     val g = knnGraph(corpus, idCol, vecCol, dims, graphK, sweeps)
     val out = search(queries, g, corpus, idCol, vecCol, k, beam, hops, entries)
-    ckRdd(g).foreach(_.unpersist(false))
+    Bridge.releaseCheckpoints(g)
     out
   }
 }

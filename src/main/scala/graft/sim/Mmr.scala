@@ -16,8 +16,8 @@ import org.apache.spark.sql.graftbridge.Bridge
   * equi-join on qid updating the per-candidate running max-similarity
   * incrementally (against the ONE vector just selected, not the whole
   * selected set — the classic O(k·|cand|) incremental form). Frames
-  * stay candidate-shortlist-sized; `Bridge.freshLeaf` checkpoints per
-  * round keep the loop constant-cost. No driver-side per-query loop:
+  * stay candidate-shortlist-sized; `Bridge.iterCheckpoint` per round
+  * keeps the loop constant-cost. No driver-side per-query loop:
   * 10 queries or 10 million advance in the same k jobs.
   *
   * Determinism/replay contract: the argmax compares the score
@@ -59,7 +59,7 @@ object Mmr {
       col(vecCol).as("vec"))
       .withColumn("nrm", Cosine.norm(col("vec")))
       .withColumn("ms", lit(-1.0))
-    var remaining = Bridge.freshLeaf(base.localCheckpoint())
+    var remaining = Bridge.iterCheckpoint(base)
     var selected: DataFrame = null
 
     for (i <- 1 to k) {
@@ -75,14 +75,14 @@ object Mmr {
       if (i < k) {
         val pv = pick.select(
           col("qid"), col("cid").as("scid"), col("vec").as("svec"), col("nrm").as("snrm"))
-        remaining = Bridge.freshLeaf(
+        // no release: `selected` reads every generation of `remaining`
+        remaining = Bridge.iterCheckpoint(
           remaining.join(pv, Seq("qid"))
             .where(col("cid") =!= col("scid"))
             .withColumn("ms",
               greatest(col("ms"),
                 Cosine.cosine(col("vec"), col("svec"), col("nrm"), col("snrm"))))
-            .drop("scid", "svec", "snrm")
-            .localCheckpoint())
+            .drop("scid", "svec", "snrm"))
       }
     }
     selected.select(

@@ -31,9 +31,10 @@ import graft.functions.{SharedHash, VecSumAgg}
   *   - Init breaks the uniform-fixpoint symmetry with md5-60 hash
   *     perturbations of (salt, id, k) — reproducible on any cluster
   *     size, no random state.
-  *   - θ/φ are localCheckpoint'ed per iteration (the FE lineage lesson)
-  *     and the MAP objective Σ c·ln Σ_k θφ + β Σ ln φ is recorded per
-  *     iteration — EM guarantees it non-decreasing, which the spec pins.
+  *   - θ/φ are checkpointed per iteration (the FE lineage lesson), the
+  *     superseded ones released, and the MAP objective
+  *     Σ c·ln Σ_k θφ + β Σ ln φ is recorded per iteration — EM
+  *     guarantees it non-decreasing, which the spec pins.
   *
   * Scale shape per iteration: two key-partitioned joins + two grouped
   * vector sums over the nnz (doc, word) frame — the same cost class as
@@ -102,16 +103,18 @@ object Lda {
           sequence(lit(0), lit(k - 1)),
           i => lit(1.0) + hashUnit(lit(s"$salt:p"), col("word"), i.cast("string")))))
       val tot = raw.agg(VecSumAgg.vecSum(col("praw"))).head().getSeq[Double](0).toArray
-      ck(raw
+      val normed = ck(raw
         .select(
           col("word"),
           zip_with(col("praw"), array(tot.map(lit): _*), (p, t) => p / t).as("phi")))
+      Bridge.releaseCheckpoints(raw)
+      normed
     }
 
     val obj = Seq.newBuilder[Double]
     for (_ <- 0 until iters) {
       // E-step: row-local responsibilities cnt·θφ/Σθφ. The nnz frame is
-      // lazily LOCAL-CHECKPOINTED so the TWO M-step consumers (byDoc,
+      // lazily CHECKPOINTED so the TWO M-step consumers (byDoc,
       // byWord) share one compute of the double join (opt guide §1.2
       // step 1 — don't do the same pass twice): byDoc's checkpoint
       // action materializes the blocks, byWord reads them. Checkpoint,
@@ -124,7 +127,7 @@ object Lda {
         .withColumn("resp", zip_with(col("theta"), col("phi"), (t, p) => t * p))
         .withColumn("denom", aggregate(col("resp"), lit(0.0), (a, b) => a + b))
         .withColumn("w", transform(col("resp"), x => x * col("cnt") / col("denom")))
-        .localCheckpoint(false)
+        .transform(Bridge.truncate(_, eager = false))
 
       // prior term of the objective at the CURRENT φ (before the
       // update, so obj records L(θ_i, φ_i) consistently — EM ascends L)
@@ -135,33 +138,30 @@ object Lda {
       // M-step sums + the data part of the objective in the same pass;
       // the objective total rides the checkpoint action as an observed
       // metric (r13: the former standalone byDoc.agg(sum) job is gone)
-      val obsDoc = org.apache.spark.sql.Observation()
-      val byDoc = ck(joined.groupBy("doc")
-        .agg(VecSumAgg.vecSum(col("w")).as("s"), sum(col("cnt") * log(col("denom"))).as("ll"))
-        .observe(obsDoc, sum(col("ll")).as("llData")))
-      val llData = obsDoc.get("llData").asInstanceOf[Double]
+      val byDoc = Bridge.checkpointStep(
+        joined.groupBy("doc")
+          .agg(VecSumAgg.vecSum(col("w")).as("s"), sum(col("cnt") * log(col("denom"))).as("ll")),
+        "lda-doc",
+        Seq(sum(col("ll")).as("llData")))
+      // the per-topic totals ride the byWord checkpoint action too
+      val byWord = Bridge.checkpointStep(
+        joined.groupBy("word").agg(VecSumAgg.vecSum(col("w")).as("s")),
+        "lda-word",
+        Seq(VecSumAgg.vecSum(col("s")).as("tot")))
+      // both successors are materialized: the E-step blocks and the
+      // superseded θ/φ leaves are dead
+      Seq(joined, theta, phi).foreach(Bridge.releaseCheckpoints)
       // θ/φ are cheap row-local projections OVER the checkpointed
       // aggregate leaves — no extra materialization job each (they
       // re-derive from the leaf on use; lineage stays one hop)
-      theta = byDoc
+      theta = byDoc.leaf
         .select(
           col("doc"),
           transform(col("s"), x => x / aggregate(col("s"), lit(0.0), (a, b) => a + b))
             .as("theta"))
-
-      // the per-topic totals ride the checkpoint action too (same fold)
-      val obsWord = org.apache.spark.sql.Observation()
-      val byWord = ck(joined.groupBy("word")
-        .agg(VecSumAgg.vecSum(col("w")).as("s"))
-        .observe(obsWord, VecSumAgg.vecSum(col("s")).as("tot")))
-      // release the iteration's checkpoint blocks (Dataset.unpersist is
-      // a no-op for checkpoints — free the backing RDD directly)
-      joined.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(false))
-      val tot = obsWord.get("tot").asInstanceOf[scala.collection.Seq[Double]].toArray
+      val tot = byWord.metrics.getSeq[Double](0).toArray
       val totCol = array(tot.map(t => lit(t + nVocab * beta)): _*)
-      phi = byWord
+      phi = byWord.leaf
         .select(
           col("word"),
           zip_with(
@@ -169,8 +169,9 @@ object Lda {
             totCol,
             (s, t) => s / t).as("phi"))
 
-      obj += llData + beta * llPhi
+      obj += byDoc.metrics.getDouble(0) + beta * llPhi
     }
+    Bridge.releaseCheckpoints(c)
     Model(theta, phi, k, obj.result())
   }
 

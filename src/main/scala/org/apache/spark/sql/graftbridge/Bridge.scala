@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -62,7 +62,7 @@ object Bridge {
     */
   def iterCheckpointKeyed(df: org.apache.spark.sql.DataFrame, eager: Boolean = true)
       : org.apache.spark.sql.DataFrame =
-    checkpointKeyedImpl(df, eager, keepStats = false)
+    checkpointKeyedImpl(df, eager, keepStats = false, "truncate")
 
   /** [[iterCheckpointKeyed]] for STATIC frames (edge lists, pair
     * tables, count frames consumed by every iteration but never
@@ -78,19 +78,20 @@ object Bridge {
     */
   def staticCheckpointKeyed(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    checkpointKeyedImpl(df, eager = true, keepStats = true)
+    checkpointKeyedImpl(df, eager = true, keepStats = true, "truncate")
 
   private def checkpointKeyedImpl(
       df: org.apache.spark.sql.DataFrame,
       eager: Boolean,
-      keepStats: Boolean): org.apache.spark.sql.DataFrame = {
+      keepStats: Boolean,
+      label: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet}
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     val exec = ds.queryExecution.executedPlan
-    val ck = truncate(df, eager)
+    val ck = truncate(df, eager, label)
     val cds = ck.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
     cds.queryExecution.analyzed match {
       case lr: LogicalRDD =>
@@ -166,13 +167,17 @@ object Bridge {
       }
       .sum
 
-  /** Release every checkpoint block reachable from `df`'s plan: the
-    * library-caller release handle (r12 advice) for frames built over
-    * [[iterCheckpointKeyed]]/[[staticCheckpointKeyed]] leaves — e.g.
-    * MarketBasket's pinned basket frame, the graph loops' static edge
-    * copies. The Bench/Verify harness sweeps persistent RDDs between
-    * queries; callers outside it invoke this once the returned frame's
-    * contents are no longer needed (the frame is NOT usable after).
+  /** Release every checkpoint block reachable from `df`'s plan. This is
+    * the one release path for checkpoints: every iteration loop frees
+    * its superseded generation here once the successor is materialized
+    * (`Dataset.unpersist` on a checkpoint frees nothing — it only drops
+    * CacheManager entries, and a checkpoint has none), and library
+    * callers free frames built over [[iterCheckpointKeyed]]/
+    * [[staticCheckpointKeyed]] leaves here, e.g. MarketBasket's pinned
+    * basket frame. Every `LogicalRDD` leaf in the plan is released, so
+    * pass a frame whose leaves the caller owns: a loop's own leaf or a
+    * projection over it, never a plan over the caller's input. The
+    * frame is NOT usable after.
     */
   def releaseCheckpoints(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed.collect {
@@ -184,11 +189,14 @@ object Bridge {
     * cluster, losing one executor mid-loop (iteration 40 of PageRank)
     * loses blocks whose lineage was truncated — the job dies. Set this
     * key to "true" (and a checkpoint dir via
-    * `spark.sparkContext.setCheckpointDir`) and every loop that
-    * truncates through [[iterCheckpoint]] switches to reliable
-    * `checkpoint()` — same values, same plans, storage on the fault-
-    * tolerant checkpoint FS. Default remains localCheckpoint: right for
-    * local[N] and short loops, no distributed FS round-trips.
+    * `spark.sparkContext.setCheckpointDir`) and every iteration loop
+    * switches to reliable `checkpoint()` — every loop checkpoints
+    * through [[truncate]] (directly, or via [[iterCheckpoint]],
+    * [[iterCheckpointKeyed]] and [[checkpointStep]]) and releases its
+    * superseded generations through [[releaseCheckpoints]]. Same
+    * values, same plans, storage on the fault-tolerant checkpoint FS.
+    * Default remains localCheckpoint: right for local[N] and short
+    * loops, no distributed FS round-trips.
     */
   val ReliableCheckpointsKey = "spark.graft.checkpoint.reliable"
 
@@ -202,14 +210,44 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     freshLeaf(truncate(df, eager))
 
-  /** Plan-capture hook for iteration-loop frames (measurement only):
-    * with GRAFT_EXPLAIN_ITER=1 every frame passing through [[truncate]]
-    * — and the explicit call sites in loops that checkpoint directly —
-    * prints its formatted physical plan before truncation hides it
-    * behind a LogicalRDD leaf. Off (zero cost) unless the env var is
+  /** A loop state frame checkpointed by [[checkpointStep]], and the
+    * metrics its checkpoint action observed (in the order asked for;
+    * empty when none were).
+    */
+  final case class Checkpointed(leaf: DataFrame, metrics: Row)
+
+  /** One iteration of a checkpointed loop: checkpoint the next state
+    * frame and read its convergence scalars in the SAME action.
+    *  - `keyed` (default) rebuilds the leaf with the frame's proven
+    *    partitioning ([[iterCheckpointKeyed]]); `keyed = false` gives the
+    *    plain stats-free leaf ([[iterCheckpoint]]).
+    *  - `metrics` are aggregate columns folded into the checkpoint
+    *    action as observed metrics, so a loop pays no extra job for its
+    *    dangling mass, norm or change count.
+    *  - Under GRAFT_EXPLAIN_ITER the plan prints once, under `label`.
+    * The checkpoint is eager. The caller releases the superseded
+    * generation with [[releaseCheckpoints]] once this returns.
+    */
+  def checkpointStep(
+      df: DataFrame,
+      label: String,
+      metrics: Seq[Column] = Nil,
+      keyed: Boolean = true): Checkpointed = {
+    val obs = if (metrics.isEmpty) None else Some(Observation())
+    val observed = obs.fold(df)(o => df.observe(o, metrics.head, metrics.tail: _*))
+    val leaf =
+      if (keyed) checkpointKeyedImpl(observed, eager = true, keepStats = false, label)
+      else freshLeaf(truncate(observed, eager = true, label))
+    Checkpointed(leaf, obs.fold(Row.empty)(_.getRow))
+  }
+
+  /** Plan-capture hook (measurement only): with GRAFT_EXPLAIN_ITER=1
+    * every frame passing through [[truncate]] prints its formatted
+    * physical plan, under the caller's label, before truncation hides
+    * it behind a LogicalRDD leaf. Off (zero cost) unless the env var is
     * set; used to produce plans/r12/\*_before|after.txt.
     */
-  def explainIter(df: org.apache.spark.sql.DataFrame, label: String): Unit =
+  private def explainIter(df: DataFrame, label: String): Unit =
     if (sys.env.contains("GRAFT_EXPLAIN_ITER")) {
       println(s"---------- iter-plan: $label ----------")
       df.explain("formatted")
@@ -217,11 +255,12 @@ object Bridge {
 
   /** Mode-aware truncation WITHOUT the freshLeaf stats reset — for loops
     * that manage origin stats another way (FixedEffects rides the probe
-    * cadence).
+    * cadence) and for frames read a fixed number of times (a loop's
+    * source copy, a shared E-step frame). `label` names the frame in the
+    * GRAFT_EXPLAIN_ITER capture.
     */
-  def truncate(df: org.apache.spark.sql.DataFrame, eager: Boolean = true)
-      : org.apache.spark.sql.DataFrame = {
-    explainIter(df, "truncate")
+  def truncate(df: DataFrame, eager: Boolean = true, label: String = "truncate"): DataFrame = {
+    explainIter(df, label)
     val spark = df.sparkSession
     val reliable =
       spark.conf.get(ReliableCheckpointsKey, "false").equalsIgnoreCase("true")

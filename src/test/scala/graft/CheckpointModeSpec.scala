@@ -106,4 +106,28 @@ class CheckpointModeSpec extends SparkSpec {
     }
     assert(a === b)
   }
+
+  test("Glm.poissonFE with a separated group: local and reliable checkpoints agree exactly") {
+    val panel = LoopLeakSpec.separatedPanel(spark)
+    val (a, b) = bothModes {
+      val m = graft.ml.Glm.poissonFE(panel, "y", Seq("x"), Seq("g"), maxIter = 3)
+      (m.coef.toSeq, m.iters, m.droppedSeparated, m.deviance,
+        m.frame.select("g", "x", "__mu").as[(String, Double, Double)].collect()
+          .sortBy(_._2)(Ordering.Double.TotalOrdering).toSeq)
+    }
+    assert(a === b)
+    assert(a._3 > 0L)
+  }
+
+  test("Raking: local and reliable checkpoints agree exactly") {
+    val cells = Seq(("a", "x", 10.0), ("a", "y", 30.0), ("b", "x", 20.0), ("b", "y", 40.0))
+      .toDF("r", "c", "n")
+    val rt = Seq(("a", 60.0), ("b", 40.0)).toDF("r", "target")
+    val ct = Seq(("x", 50.0), ("y", 50.0)).toDF("c", "target")
+    val (a, b) = bothModes {
+      graft.ml.Raking.ipf(cells, "r", "c", "n", rt, ct, iters = 5)
+        .as[(String, String, Double, Double, Double)].collect().sortBy(t => (t._1, t._2)).toSeq
+    }
+    assert(a === b)
+  }
 }

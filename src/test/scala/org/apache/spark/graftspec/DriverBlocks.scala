@@ -8,6 +8,15 @@ import org.apache.spark.storage.BroadcastBlockId
   */
 object DriverBlocks {
 
+  /** ids of the RDDs that hold blocks anywhere, as the block manager
+    * master knows them (updated synchronously on every unpersist,
+    * unlike the weak values of `SparkContext.getPersistentRDDs`)
+    */
+  def rddsWithBlocks: Set[Int] =
+    SparkEnv.get.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks.keysIterator.flatMap(_.asRDDId).map(_.rddId))
+      .toSet
+
   /** broadcast id → value, for every broadcast whose value the driver
     * still holds (task binaries included) */
   def broadcastValues: Map[Long, Any] = {
