@@ -153,14 +153,6 @@ object Glm {
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
   }
 
-  private def timed[A](name: String)(f: => A): A =
-    if (sys.env.contains("GRAFT_GLM_DEBUG")) {
-      val t0 = System.nanoTime
-      val r = f
-      println(f"[glm-debug] $name: ${(System.nanoTime - t0) / 1e9}%.2fs")
-      r
-    } else f
-
   /** Canonical-link family: w = dμ/dη evaluates the IRLS weight and the
     * working response is z = η + (y − μ)/w.
     */
@@ -777,17 +769,15 @@ object Glm {
     // partitions — every subsequent pass (separation check, scalar
     // aggs, each IRLS iteration) reads these blocks in parallel instead
     // of re-scanning a possibly single-split source serially
-    val raw = timed("source checkpoint")(
-      Bridge.truncate(spreadForIteration(df.select(needed.map(col): _*))))
+    val raw = Bridge.truncate(spreadForIteration(df.select(needed.map(col): _*)))
     // fast path: ONE grouping-sets pass answers "is any FE group
     // all-zero" — the common healthy-panel case then skips the
     // checkpoint-and-count drop loop entirely (profiled at ~1.4s of a
     // 6s warm PPML fit). Only a frame that actually contains separated
     // groups pays for the iterate-to-fixpoint removal.
-    val (base, nDropped) = timed("separation check")(
-      if (dropSeparated && anySeparatedGroup(raw, y, fes))
-        dropSeparatedGroups(raw, y, fes)
-      else (raw, 0L))
+    val (base, nDropped) =
+      if (dropSeparated && anySeparatedGroup(raw, y, fes)) dropSeparatedGroups(raw, y, fes)
+      else (raw, 0L)
     // the drop loop checkpoints its own filtered frame — raw's blocks
     // are dead the moment it returns a different one
     if (base ne raw) Bridge.releaseCheckpoints(raw)
@@ -804,9 +794,9 @@ object Glm {
     // Σw, not the row count) + the distinct-FE-tuple count that feeds
     // every iteration's fitWeighted (a property of the rows, not the
     // iteration — counting once saves one action per IRLS step)
-    val initRow = timed("ybar/counts agg")(base
+    val initRow = base
       .agg(avg(yc), count(lit(1)), count_distinct(struct(fes.map(col): _*)))
-      .head())
+      .head()
     val ybar = initRow.getDouble(0)
     val nObs = initRow.getLong(1)
     val nCells = initRow.getLong(2)
@@ -847,28 +837,28 @@ object Glm {
         // the regression target is the working response net of the
         // offset: η = Xβ + FE + offset, so z − offset ≈ Xβ + FE
         .withColumn("__zr", col("__z") - off)
-      fm = timed(s"iter $iter fitWeighted")(FixedEffects.fitWeighted(
+      val superseded = fm
+      fm = FixedEffects.fitWeighted(
         work, "__zr", xs, fes, weight = "__w",
         keep = ((y +: "__eta" +: "__mu" +: "__z" +: offset.toSeq) ++ keep).distinct,
-        collectCellLimit = collectCellLimit, knownCellCount = Some(nCells)))
+        collectCellLimit = collectCellLimit, knownCellCount = Some(nCells))
       // η' = z − (z̃r − x̃'β): the fitted value of the working response
       // (offset re-included via z = zr + offset), recovered row-locally.
       // localCheckpoint, not persist: a cache-backed materialization
       // pays InMemoryRelation's columnar encoding of the FE string
       // columns every iteration (measured ~2x the checkpoint write),
       // and the eager checkpoint keeps plan growth flat.
-      val next = timed(s"iter $iter eta checkpoint")(fm.demeaned
+      val next = fm.demeaned
         .withColumn("__eta", col("__z") - resid(fm))
         .select((needed :+ "__eta").map(col): _*)
-        .transform(Bridge.truncate(_, eager = false)))
+        .transform(Bridge.truncate(_, eager = false))
       val muNew = fam.mu(col("__eta"))
       val devAggs =
         sum(fam.deviance(yc, muNew)) +:
           (if (estimateAlpha)
              Seq(sum((yc - muNew) * (yc - muNew) - yc), sum(muNew * muNew))
            else Nil)
-      val devRow = timed(s"iter $iter deviance agg")(
-        next.agg(devAggs.head, devAggs.tail: _*).head())
+      val devRow = next.agg(devAggs.head, devAggs.tail: _*).head()
       val devNow = devRow.getDouble(0)
       val alphaConverged =
         if (estimateAlpha) {
@@ -879,8 +869,13 @@ object Glm {
         } else true
 
       // `next` is materialized: the η frame two generations back fed only
-      // the superseded fit (at iteration 1 it is the source frame)
+      // the superseded fit (at iteration 1 it is the source frame), and
+      // so did that fit's effect tables. A multi-FE fit owns its tables'
+      // leaves (checkpoints for an FE over the broadcast gate, local
+      // relations otherwise); a one-FE table is a plan over the η frame.
       if (prev != null) Bridge.releaseCheckpoints(prev)
+      if (superseded != null && fes.length > 1)
+        superseded.effectTables.foreach(Bridge.releaseCheckpoints)
       prev = cur
       cur = next
       converged =

@@ -1,9 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.storage.StorageLevel
 
 /** Minimal bridge into Spark's `private[sql]` Column construction so
   * graft's custom Catalyst expressions can surface as `Column`s — the
@@ -192,8 +194,9 @@ object Bridge {
     * `spark.sparkContext.setCheckpointDir`) and every iteration loop
     * switches to reliable `checkpoint()` — every loop checkpoints
     * through [[truncate]] (directly, or via [[iterCheckpoint]],
-    * [[iterCheckpointKeyed]] and [[checkpointStep]]) and releases its
-    * superseded generations through [[releaseCheckpoints]]. Same
+    * [[iterCheckpointKeyed]] and [[checkpointStep]]) or, for RDD state,
+    * [[truncateRdd]], and releases its superseded generations through
+    * [[releaseCheckpoints]] (RDD state: `unpersist`). Same
     * values, same plans, storage on the fault-tolerant checkpoint FS.
     * Default remains localCheckpoint: right for local[N] and short
     * loops, no distributed FS round-trips.
@@ -253,24 +256,36 @@ object Bridge {
       df.explain("formatted")
     }
 
-  /** Mode-aware truncation WITHOUT the freshLeaf stats reset — for loops
-    * that manage origin stats another way (FixedEffects rides the probe
-    * cadence) and for frames read a fixed number of times (a loop's
-    * source copy, a shared E-step frame). `label` names the frame in the
+  /** Mode-aware truncation WITHOUT the freshLeaf stats reset — for
+    * frames read a fixed number of times (a loop's source copy, a shared
+    * E-step frame, an FE effect table). `label` names the frame in the
     * GRAFT_EXPLAIN_ITER capture.
     */
   def truncate(df: DataFrame, eager: Boolean = true, label: String = "truncate"): DataFrame = {
     explainIter(df, label)
-    val spark = df.sparkSession
-    val reliable =
-      spark.conf.get(ReliableCheckpointsKey, "false").equalsIgnoreCase("true")
-    if (reliable) {
-      require(
-        spark.sparkContext.getCheckpointDir.isDefined,
-        s"$ReliableCheckpointsKey=true needs spark.sparkContext.setCheckpointDir " +
-          "(a fault-tolerant FS path) before the first loop runs")
-      df.checkpoint(eager)
-    } else df.localCheckpoint(eager)
+    if (reliable(df.sparkSession)) df.checkpoint(eager) else df.localCheckpoint(eager)
+  }
+
+  /** [[truncate]] for an RDD loop state, lazily: `rdd` is marked for a
+    * local (default) or reliable ([[ReliableCheckpointsKey]]) checkpoint,
+    * which the first job that computes it materializes. Free it with
+    * `unpersist`. Returns `rdd`.
+    */
+  def truncateRdd[T](spark: SparkSession, rdd: RDD[T]): RDD[T] = {
+    if (reliable(spark)) {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+    } else rdd.localCheckpoint()
+    rdd
+  }
+
+  private def reliable(spark: SparkSession): Boolean = {
+    val on = spark.conf.get(ReliableCheckpointsKey, "false").equalsIgnoreCase("true")
+    require(
+      !on || spark.sparkContext.getCheckpointDir.isDefined,
+      s"$ReliableCheckpointsKey=true needs spark.sparkContext.setCheckpointDir " +
+        "(a fault-tolerant FS path) before the first loop runs")
+    on
   }
 
   /** Register a temp SQL function on an EXISTING session (the extension

@@ -107,6 +107,25 @@ class CheckpointModeSpec extends SparkSpec {
     assert(a === b)
   }
 
+  test("FixedEffects with both FEs over the broadcast gate: local and reliable checkpoints agree exactly") {
+    // a path graph (unit u at times u and u + 1): four Halperin sweeps,
+    // then CG iterations, on distributed vectors
+    val df = (for (u <- 0 until 4; t <- Seq(u, u + 1); rep <- 0 until 2) yield {
+      val x = math.sin(u * 1.3 + t * 0.7 + rep) * 2
+      (u, t, x, 2.0 * x + u * 0.5 - t * 0.3 + (rep - 0.5))
+    }).toDF("u", "t", "x", "y")
+    spark.conf.set("spark.graft.fe.broadcastGroupLimit", "3") // < 4 and 5 groups
+    try {
+      val (a, b) = bothModes {
+        val m = graft.ml.FixedEffects.fit(df, "y", Seq("x"), Seq("u", "t"), maxSweeps = 4,
+          collectCellLimit = 0L)
+        (m.coef.toSeq, m.sweeps, m.effectTables.map(_.collect().toSeq))
+      }
+      assert(a === b)
+      assert(a._2 > 4, s"the fit should reach the CG: ${a._2} sweeps")
+    } finally spark.conf.unset("spark.graft.fe.broadcastGroupLimit")
+  }
+
   test("Glm.poissonFE with a separated group: local and reliable checkpoints agree exactly") {
     val panel = LoopLeakSpec.separatedPanel(spark)
     val (a, b) = bothModes {

@@ -115,18 +115,29 @@ class LoopLeakSpec extends SparkSpec {
     Seq(m.frame)
   }
 
-  // two FEs over the broadcast gate send the fit through the FE frame
-  // regime, whose cleanup must free only the frames it made — not the
-  // fit's source checkpoint, which the returned frame still reads (the
-  // regime's own per-fit frames are outside this invariant)
+  // two FEs over the broadcast gate keep their vectors distributed and
+  // their effect tables as checkpoints: the returned frame reads the last
+  // fit's tables, and the superseded fit's are released with its η frame
   test("Glm.poissonFE through the FE frame regime keeps the checkpoint its frame reads") {
     val panel = LoopLeakSpec.separatedPanel(spark).where(col("g") =!= "g4")
       .withColumn("h", concat(lit("h"), (monotonically_increasing_id() % 3).cast("string")))
     spark.conf.set("spark.graft.fe.broadcastGroupLimit", "2") // < 3 groups
-    try {
+    try assertNoLeak("Glm.poissonFE over the gate") {
       val m = graft.ml.Glm.poissonFE(panel, "y", Seq("x"), Seq("g", "h"),
-        collectCellLimit = 0, maxIter = 1)
-      m.frame.write.format("noop").mode("overwrite").save()
+        collectCellLimit = 0, maxIter = 2)
+      assert(m.iters == 2)
+      Seq(m.frame)
+    } finally spark.conf.unset("spark.graft.fe.broadcastGroupLimit")
+  }
+
+  test("FixedEffects.fit with both FEs over the broadcast gate leaves blocks only for its effect tables") {
+    val panel = (0 until 48).map { i =>
+      (s"u${i % 8}", s"t${(i / 3) % 6}", math.sin(i * 0.7), math.cos(i * 0.3) + i % 8 * 0.5)
+    }.toDF("u", "t", "x", "y")
+    spark.conf.set("spark.graft.fe.broadcastGroupLimit", "4") // < 6 and 8 groups
+    try assertNoLeak("FixedEffects.fit over the gate") {
+      val m = graft.ml.FixedEffects.fit(panel, "y", Seq("x"), Seq("u", "t"), collectCellLimit = 0)
+      m.demeaned +: m.effectTables
     } finally spark.conf.unset("spark.graft.fe.broadcastGroupLimit")
   }
 }

@@ -164,8 +164,8 @@ class RegressionSpec extends SparkSpec {
     val fl = FixedEffects.demeanFull(df, Seq("y", "x"), Seq("u", "t"), tol = 1e-12)
     val fd = FixedEffects
       .demeanFull(df, Seq("y", "x"), Seq("u", "t"), tol = 1e-12, collectCellLimit = 0)
-    val effL = fl.effects.get.head.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    val effD = fd.effects.get.head.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val effL = fl.effects.head.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
+    val effD = fd.effects.head.collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
     for ((g, v) <- effL) assert(math.abs(v - effD(g)) < 1e-8)
 
     // and the full fit (the q59 path) agrees coefficient-for-coefficient
@@ -823,21 +823,6 @@ class RegressionSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.fe.broadcastGroupLimit")
   }
 
-  test("pickBigFe: the pre-partition key is the LARGEST non-broadcast dimension") {
-    // r11 verdict #3: the first-match pick could land on the SMALLER of
-    // two oversized dimensions, re-shuffling the larger one every CG
-    // iteration; the contract is max-by-group-count among non-broadcast
-    val fes = Seq("worker", "firm", "year")
-    val bc = Map("worker" -> false, "firm" -> false, "year" -> true)
-    val counts = Map("worker" -> 5000000L, "firm" -> 80000000L, "year" -> 30L)
-    assert(FixedEffects.pickBigFe(fes, bc, counts) === "firm")
-    // declaration order must not matter
-    assert(FixedEffects.pickBigFe(fes.reverse, bc, counts) === "firm")
-    // single oversized dimension: picked regardless of size rank
-    assert(FixedEffects.pickBigFe(fes,
-      Map("worker" -> false, "firm" -> true, "year" -> true), counts) === "worker")
-  }
-
   test("fitWeighted: distributed cell regime matches the driver regime") {
     val rows = for (u <- 0 until 5; t <- 0 until 6) yield {
       val x = math.sin(u * 2.1 + t * 0.9) * 3
@@ -874,9 +859,18 @@ class RegressionSpec extends SparkSpec {
     * not counted and the count is complete when it is read.
     */
   private def countJobs[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (a, bytes) = jobResultBytes(body)
+    (a, bytes.length)
+  }
+
+  /** [[countJobs]], with the bytes each job's tasks returned to the
+    * driver, in job order. */
+  private def jobResultBytes[A](body: => A): (A, Seq[Long]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]
+    val bytes = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]
     val done = new java.util.concurrent.CountDownLatch(1)
     @volatile var counting = false
     val l = new SparkListener {
@@ -884,8 +878,15 @@ class RegressionSpec extends SparkSpec {
         Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
           case "__jobs_open" => counting = true
           case "__jobs_close" => counting = false; done.countDown()
-          case _ => if (counting) jobs.incrementAndGet()
+          case _ => if (counting) {
+            jobs.add(e.jobId)
+            bytes.put(e.jobId, 0L)
+            e.stageIds.foreach(stageJob.put(_, e.jobId))
+          }
         }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        for (job <- Option(stageJob.get(e.stageId)); m <- Option(e.taskMetrics))
+          bytes.merge(job, m.resultSize, (x, y) => x + y)
     }
     def sentinel(group: String): Unit = {
       sc.setJobGroup(group, group)
@@ -897,8 +898,32 @@ class RegressionSpec extends SparkSpec {
       val a = body
       sentinel("__jobs_close")
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      (a, jobs.get)
+      (a, jobs.asScala.toSeq.map(bytes.get(_).longValue))
     } finally sc.removeSparkListener(l)
+  }
+
+  test("an FE over the broadcast gate: no job of the fit returns its keys or a vector of its length to the driver") {
+    // 20000 workers at two of 50 firms each, drawn at random: a well
+    // connected panel; the gate lies between the two FEs
+    val workers = 20000
+    val rnd = new scala.util.Random(7)
+    val df = (0 until workers).flatMap { w =>
+      val a = rnd.nextInt(50)
+      Seq(a, (a + 1 + rnd.nextInt(49)) % 50).map { firm =>
+        val x = math.sin(w * 0.37 + firm * 1.1)
+        (w, firm, x, 1.5 * x + (w % 97) * 0.01 - firm * 0.02 + math.cos(w * 0.11 + firm))
+      }
+    }.toDF("worker", "firm", "x", "y")
+    val ref = FixedEffects.fit(df, "y", Seq("x"), Seq("worker", "firm"))
+    spark.conf.set("spark.graft.fe.broadcastGroupLimit", "1000")
+    val (m, bytes) = try jobResultBytes(
+      FixedEffects.fit(df, "y", Seq("x"), Seq("worker", "firm"), collectCellLimit = 0))
+    finally spark.conf.unset("spark.graft.fe.broadcastGroupLimit")
+    info(s"sweeps=${m.sweeps} (driver regime ${ref.sweeps}), ${bytes.length} jobs, " +
+      s"largest task results ${bytes.max} B")
+    // a worker vector's one column is 8 B per worker, its keys 4 B
+    assert(bytes.max < 4L * workers, s"a job returned ${bytes.max} B to the driver")
+    assert(math.abs(m.coef(0) - ref.coef(0)) < 1e-8, s"${m.coef(0)} vs ${ref.coef(0)}")
   }
 
   test("cell-RDD regime: a fit is bit-reproducible and sweeps like the driver regime") {
@@ -910,7 +935,7 @@ class RegressionSpec extends SparkSpec {
         maxSweeps = 120, tol = 1e-9, collectCellLimit = 0)
       (m.coef.toSeq.map(java.lang.Double.doubleToRawLongBits), m.sweeps, d.sweeps,
         d.cellGram.get.gram.toSeq.map(_.toSeq.map(java.lang.Double.doubleToRawLongBits)),
-        d.effects.get.map(_.collect().toSeq))
+        d.effects.map(_.collect().toSeq))
     }
     val a = run()
     val b = run()
@@ -955,6 +980,7 @@ class RegressionSpec extends SparkSpec {
     val cols = Seq("y", "x")
     val cells = FixedEffects.cellStats(rows.toDF("u", "t", "x", "y"), cols, Seq("u", "t"), lit(1.0))
       .persist()
+    def at(v: CellPasses.Vec, f: Int, g: Int, c: Int): Double = v(f).asInstanceOf[DriverBlock].a(g * 2 + c)
     val local = new LocalCells(cells.collect(), 2, 2)
     val (effL, sweepsL) = FixedEffects.solveCells(local, 2, 500, 1e-12, accelerate = true)
     val gramL = local.gram(effL)
@@ -965,9 +991,10 @@ class RegressionSpec extends SparkSpec {
         assert(sweeps === sweepsL)
         for (f <- 0 until 2; e <- local.index(f).entrySet().asScala; c <- 0 until 2) {
           val g = p.index(f).get(e.getKey).intValue
-          assert(math.abs(eff(f)(g)(c) - effL(f)(e.getValue.intValue)(c)) < 1e-10)
+          assert(math.abs(at(eff, f, g, c) - at(effL, f, e.getValue.intValue, c)) < 1e-10)
         }
-        val v = Array.fill(2)(Array.tabulate(25)(j => math.sin(j.toDouble)))
+        val v = Array[FeBlock](DriverBlock(Array.tabulate(20 * 2)(i => math.sin((i / 2).toDouble))),
+          DriverBlock(Array.tabulate(5 * 2)(i => math.sin((20 + i / 2).toDouble))))
         val passes = Seq[() => Any](() => p.stepSums(0, eff), () => p.stepSums(1, eff),
           () => p.matvec(v, Array(true, false)), () => p.gram(eff))
         for (run <- passes) assert(countJobs(run())._2 === 1, s"$parts partitions")
